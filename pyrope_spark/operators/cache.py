@@ -183,10 +183,13 @@ class ResultCacheTable:
         self.spark = spark
         self.path = path
 
-    def read(self) -> DataFrame:
+    def exists(self) -> bool:
         import os
 
-        if not os.path.exists(self.path):
+        return os.path.exists(self.path)
+
+    def read(self) -> DataFrame:
+        if not self.exists():
             return self.spark.createDataFrame([], self.SCHEMA)
         return self.spark.read.parquet(self.path)
 

@@ -11,28 +11,48 @@ Reference: ``src/Pyrope.GarnetServer/Vector/DeltaVectorIndex.cs`` —
 Spark-first composition (no new physical machinery):
 - tail = packed segments partitioned by cluster_id + a centroid table
   (``operators/segments.py`` + MLlib KMeans from ``operators/ivf.py``);
-- head = the store's append-only head parquet, searched with the GEMM
-  brute-force scan (it is small between compactions by construction);
-- the head-wins merge is an anti-join of tail hits against head KEYS —
-  any head record (live or tombstone) shadows its tail id, exactly the
-  reference dedup rule;
+- head = the store's append-only head parquet; it is small between
+  compactions by construction, so a search pulls it to the driver;
+- search is ONE eager pass of three Spark jobs, the reference's single
+  in-RAM pass: collect the queries, collect the raw head records (bounded),
+  and scan the probed tail segments with every head id masked inside the
+  scan kernel. The driver scores the live head rows and merges them with the
+  tail's per-partition top-K — any head record (live or tombstone) shadows
+  its tail id, exactly the reference dedup rule;
 - Build() = ``VectorStore.compact()`` + KMeans + segment pack + centroid
   write, all one batch job; the registry epoch bump invalidates caches (C8).
+  Each build stamps a fresh build id into the centroid parquet's metadata,
+  which keys the per-build cache of the loaded segment relation.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyrope_spark.operators.ivf import DEFAULT_NPROBE, IvfModel, build_ivf
-from pyrope_spark.operators.knn import knn_bruteforce
-from pyrope_spark.operators.segments import ivf_search_packed, pack_segments, write_segments
+from pyrope_spark.operators.knn import knn_bruteforce, score_matrix
+from pyrope_spark.operators.segments import (
+    SEGMENT_SCHEMA,
+    ivf_search_packed,
+    ivf_search_packed_single_job,
+    merge_topk_partials,
+    pack_segments,
+    topk_rows_det,
+    write_segments,
+)
 from pyrope_spark.operators.topk import topk_per_group
-from pyrope_spark.store.vector_store import KEY_COLS, VectorStore
+from pyrope_spark.store.vector_store import VectorStore
+
+SEARCH_SCHEMA = "query_id string, id string, score double, rank int"
+BUILD_ID_KEY = b"pyrope.build_id"
 
 
 def _index_dir(store: VectorStore, tenant_id: str, index_name: str) -> str:
@@ -74,7 +94,7 @@ def build_delta_index(
     )
     d = _index_dir(store, tenant_id, index_name)
     write_segments(seg, os.path.join(d, "segments"))
-    _write_centroids(os.path.join(d, "centroids"), model.centroids)
+    _write_centroids(os.path.join(d, "centroids"), model.centroids, uuid.uuid4().hex)
     if meta is not None:
         meta.algo = "ivf_flat"
         meta.params = {"nlist": model.nlist, "rows_per_segment": rows_per_segment}
@@ -82,15 +102,13 @@ def build_delta_index(
     return model
 
 
-def _write_centroids(path: str, centroids) -> None:
+def _write_centroids(path: str, centroids, build_id: str) -> None:
     """The centroid table is nlist-sized (hundreds of rows) — write it
     driver-side with pyarrow instead of paying a Spark job for a 100-row
     parquet (r11, guide §1.2: the lifecycle pays this once per build and
-    once per load; same file format, same schema, same reader)."""
+    once per load; same file format, same schema, same reader). The build
+    id rides in the file's key-value metadata."""
     import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     if os.path.exists(path):
         shutil.rmtree(path)
@@ -103,46 +121,60 @@ def _write_centroids(path: str, centroids) -> None:
                 pa.list_(pa.float64()),
             ),
         }
-    )
+    ).replace_schema_metadata({BUILD_ID_KEY: build_id.encode()})
     pq.write_table(tbl, os.path.join(path, "part-00000.parquet"))
 
 
-def _read_centroids(store: VectorStore, path: str):
-    """Driver-side pyarrow read of the nlist-sized centroid table; falls
-    back to a Spark read for non-local storage."""
+def _read_centroids(store: VectorStore, path: str) -> tuple[list, str | None]:
+    """Driver-side pyarrow read of the nlist-sized centroid table, with the
+    build id from its metadata. Falls back to a Spark read (no build id) for
+    storage pyarrow cannot open or parse."""
     try:
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(path).to_pydict()
+        tbl = pq.read_table(path)
+        build_id = (tbl.schema.metadata or {}).get(BUILD_ID_KEY)
+        cols = tbl.to_pydict()
         order = sorted(
-            range(len(tbl["cluster_id"])), key=lambda i: tbl["cluster_id"][i]
+            range(len(cols["cluster_id"])), key=lambda i: cols["cluster_id"][i]
         )
-        return [tbl["centroid"][i] for i in order]
-    except (OSError, ImportError):
+        return (
+            [cols["centroid"][i] for i in order],
+            build_id.decode() if build_id else None,
+        )
+    except (OSError, pa.ArrowException):
         rows = (
             store.spark.read.parquet(path).orderBy("cluster_id").collect()
         )
-        return [r["centroid"] for r in rows]
+        return [r["centroid"] for r in rows], None
 
 
 def load_delta_index(store: VectorStore, tenant_id: str, index_name: str) -> tuple[DataFrame, IvfModel]:
     """Reload (segments, model) — the Snapshot/Load analog (S8): everything
-    is already durable parquet, so 'load' is just reads."""
+    is already durable parquet, so 'load' is just reads.
+
+    The segment relation and the centroids are cached on the store once per
+    build, keyed by the build id that :func:`build_delta_index` writes into
+    the centroid file (read on every call). A rebuild by any store instance
+    or process changes the id, so only the first load after a build pays
+    the listing of the segment directory."""
     d = _index_dir(store, tenant_id, index_name)
-    seg = store.spark.read.parquet(os.path.join(d, "segments"))
-    cent = _read_centroids(store, os.path.join(d, "centroids"))
+    cent, build_id = _read_centroids(store, os.path.join(d, "centroids"))
+    hit = store.index_cache.get(d)
+    if build_id is not None and hit is not None and hit[0] == build_id:
+        seg, centroids = hit[1], hit[2]
+    else:
+        # the declared schema spares a footer-reading job per load
+        seg = store.spark.read.schema(SEGMENT_SCHEMA).parquet(os.path.join(d, "segments"))
+        centroids = np.asarray(cent, dtype=np.float64)
+        if build_id is not None:
+            store.index_cache[d] = (build_id, seg, centroids)
     meta = store.registry.get(tenant_id, index_name)
     metric = meta.metric if meta else "l2"
-    model = IvfModel(
-        centroids=np.asarray(cent, dtype=np.float64),
-        metric=metric,
-        nlist=len(cent),
-    )
+    model = IvfModel(centroids=centroids, metric=metric, nlist=len(centroids))
     return seg, model
 
 
-DEFAULT_MAX_HEAD_KEYS = 100_000  # ~ a few MB broadcast; beyond this the head
-# is overdue for compaction anyway
+DEFAULT_MAX_HEAD_KEYS = 100_000  # head records pulled to the driver per
+# search; beyond this the head is overdue for compaction anyway
 
 
 def delta_search(
@@ -157,74 +189,91 @@ def delta_search(
     auto_build_nlist: int | None = None,
 ) -> DataFrame:
     """Head ∪ tail search with head-wins dedup (DeltaVectorIndex.cs:76-122).
+    Returns ``(query_id, id, score, rank)``, the top ``k`` per query.
 
-    Head (post-build writes) is scanned brute-force; tail via packed IVF.
-    Any head key shadows its tail id — including tombstones, so deletes
-    issued after a build correctly hide built rows.
+    The search is eager: it runs inside this call as one pass of three
+    Spark jobs and returns a local DataFrame.
 
-    The head-shadow set is collected once (ONE pre-search action) and masked
-    inside the tail scan kernel, so the tail fetch is exactly ``k`` per query
-    regardless of head size — no ``k + |head|`` over-fetch. A head larger
-    than ``max_head_keys`` means compaction is overdue: with
-    ``auto_build_nlist`` set the index is rebuilt first (the reference's
-    Build-on-threshold policy); otherwise the search falls back to the
-    anti-join + bounded over-fetch shape and still returns exact results.
+    1. Collect the queries.
+    2. Collect the raw head records (:meth:`VectorStore.collect_head`),
+       resolved latest-wins on the driver. The live head rows are scored
+       there with the same float64 GEMM as the Spark scan kernels.
+    3. Scan the probed tail segments with every head id masked inside the
+       kernel, so a head record — live or tombstone — shadows its tail id
+       and the tail still yields exactly ``k`` candidates per query. Each
+       scan task keeps a partial top-K; nothing is shuffled.
+
+    Head and tail candidates merge on the driver under the (score desc,
+    id asc) order. The segment relation is cached per build
+    (:func:`load_delta_index`), so only the first search after a build also
+    pays a listing job.
+
+    More than ``max_head_keys`` head records means compaction is overdue:
+    with ``auto_build_nlist`` set the index is rebuilt first (the
+    reference's Build-on-threshold policy); otherwise the search falls back
+    to a lazy anti-join + bounded over-fetch plan that is still exact.
     """
     seg, model = load_delta_index(store, tenant_id, index_name)
-
-    head_all = (
-        store._read(store.head_path)
-        .filter((F.col("tenant_id") == tenant_id) & (F.col("index_name") == index_name))
-    )
-    # resolve latest within head (an id can be upserted then deleted)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*KEY_COLS).orderBy(F.desc("_seq"))
-    head_resolved = (
-        head_all.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
-    )
-    head_rows = head_resolved.select("id", "deleted").limit(max_head_keys + 1).collect()
-
-    if len(head_rows) > max_head_keys:
+    head = store.collect_head(tenant_id, index_name, max_head_keys)
+    if head is None:
         if auto_build_nlist is not None:
             build_delta_index(store, tenant_id, index_name, nlist=auto_build_nlist)
-            seg, model = load_delta_index(store, tenant_id, index_name)
             return delta_search(
                 store, tenant_id, index_name, queries, k, nprobe,
                 max_head_keys=max_head_keys,
             )
-        # oversized head without auto-build: exact fallback (anti-join with
-        # |head| over-fetch — the pre-round-2 shape)
-        head_keys = head_resolved.select("id")
-        n_head = head_keys.count()
-        tail_hits = (
-            ivf_search_packed(seg, model, queries, k=k + n_head, nprobe=nprobe)
-            .drop("rank")
-            .join(head_keys, "id", "left_anti")
-        )
-        head_live = head_resolved.filter(~F.col("deleted"))
-        head_hits = knn_bruteforce(
-            head_live, queries, k=k, metric=model.metric, impl="gemm"
-        ).drop("rank")
-        merged = tail_hits.unionByName(head_hits)
-        return topk_per_group(
-            merged, ["query_id"], k, score_col="score", tiebreak_col="id", two_phase=False
+        return _oversized_head_search(
+            store, tenant_id, index_name, seg, model, queries, k, nprobe
         )
 
-    shadow = frozenset(r["id"] for r in head_rows)
-    has_live = any(not r["deleted"] for r in head_rows)
-    tail_hits = ivf_search_packed(
-        seg, model, queries, k=k, nprobe=nprobe, exclude_ids=shadow or None
+    qrows = queries.select("query_id", "vector").collect()
+    if not qrows:
+        return store.spark.createDataFrame([], SEARCH_SCHEMA)
+    qids = [r["query_id"] for r in qrows]
+    qmat = np.asarray([r["vector"] for r in qrows], dtype=np.float64)
+    head_ids, deleted, vectors = head
+    out = ivf_search_packed_single_job(
+        seg, model, list(zip(qids, qmat)), k, nprobe, exclude_ids=set(head_ids)
+    )
+    live = ~deleted
+    if live.any():
+        ids = head_ids[live]
+        scores = score_matrix(vectors[live].astype(np.float64), qmat, model.metric)
+        top = min(max(k, 1), len(ids))
+        flat = topk_rows_det(scores, ids, top).T.ravel()
+        head_hits = pd.DataFrame(
+            {
+                "query_id": np.repeat(np.asarray(qids, dtype=object), top),
+                "id": ids[flat],
+                "score": scores[flat, np.repeat(np.arange(len(qids)), top)],
+            }
+        )
+        out = merge_topk_partials(
+            pd.concat([out.drop(columns="rank"), head_hits], ignore_index=True), k
+        )
+    out = out[["query_id", "id", "score", "rank"]].astype({"rank": "int32"})
+    return store.spark.createDataFrame(out, SEARCH_SCHEMA)
+
+
+def _oversized_head_search(
+    store: VectorStore, tenant_id: str, index_name: str, seg: DataFrame,
+    model: IvfModel, queries: DataFrame, k: int, nprobe: int,
+) -> DataFrame:
+    """Exact lazy plan for a head too large for the driver: the tail
+    over-fetches ``k + |head ids|`` and anti-joins the head's ids away,
+    then unions with a brute-force scan of the live head."""
+    head = store.head(tenant_id, index_name)
+    head_keys = head.select("id")
+    n_head = head_keys.count()
+    tail_hits = (
+        ivf_search_packed(seg, model, queries, k=k + n_head, nprobe=nprobe)
+        .drop("rank")
+        .join(head_keys, "id", "left_anti")
+    )
+    head_hits = knn_bruteforce(
+        head.filter(~F.col("deleted")), queries, k=k, metric=model.metric, impl="gemm"
     ).drop("rank")
-
-    if has_live:
-        head_live = head_resolved.filter(~F.col("deleted"))
-        head_hits = knn_bruteforce(
-            head_live, queries, k=k, metric=model.metric, impl="gemm"
-        ).drop("rank")
-        merged = tail_hits.unionByName(head_hits)
-    else:
-        merged = tail_hits
     return topk_per_group(
-        merged, ["query_id"], k, score_col="score", tiebreak_col="id", two_phase=False
+        tail_hits.unionByName(head_hits), ["query_id"], k, score_col="score",
+        tiebreak_col="id", two_phase=False,
     )

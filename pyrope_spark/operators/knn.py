@@ -239,6 +239,27 @@ def knn_bruteforce(
     return out
 
 
+def score_matrix(vmat: np.ndarray, qmat: np.ndarray, metric: str) -> np.ndarray:
+    """float64 (rows x queries) scores, higher is better: the one GEMM
+    formula shared by every numpy scan kernel and the driver-side head
+    scan, so their scores agree bit for bit. l2 is
+    ``-(|v|^2 - 2 v.q + |q|^2)``; cosine scores a zero-norm row or query 0."""
+    if metric == "ip":
+        return vmat @ qmat.T
+    if metric == "l2":
+        v2 = np.einsum("ij,ij->i", vmat, vmat)[:, None]
+        q2 = np.einsum("ij,ij->i", qmat, qmat)[None, :]
+        return -(v2 - 2.0 * (vmat @ qmat.T) + q2)
+    vnorm = np.linalg.norm(vmat, axis=1)
+    qnorm = np.linalg.norm(qmat, axis=1)
+    vdir = vmat / np.where(vnorm < 1e-6, 1.0, vnorm)[:, None]
+    qdir = qmat / np.where(qnorm < 1e-6, 1.0, qnorm)[:, None]
+    scores = vdir @ qdir.T
+    scores[vnorm < 1e-6, :] = 0.0
+    scores[:, qnorm < 1e-6] = 0.0
+    return scores
+
+
 def _score_gemm(
     live: DataFrame,
     qids: list,
@@ -271,21 +292,7 @@ def _score_gemm(
                 continue
             vmat = np.vstack(pdf[vector_col].to_numpy()).astype(np.float64)  # B x d
             ids = pdf[id_col].astype(str).to_numpy()
-            if metric == "ip":
-                scores = vmat @ qmat_b.T  # B x Q
-            elif metric == "l2":
-                # -(|v|^2 - 2 v.q + |q|^2)
-                v2 = np.einsum("ij,ij->i", vmat, vmat)[:, None]
-                q2 = np.einsum("ij,ij->i", qmat_b, qmat_b)[None, :]
-                scores = -(v2 - 2.0 * (vmat @ qmat_b.T) + q2)
-            else:  # cosine
-                vnorm = np.linalg.norm(vmat, axis=1)
-                qnorm = np.linalg.norm(qmat_b, axis=1)
-                vdir = vmat / np.where(vnorm < 1e-6, 1.0, vnorm)[:, None]
-                qdir = qmat_b / np.where(qnorm < 1e-6, 1.0, qnorm)[:, None]
-                scores = vdir @ qdir.T
-                scores[vnorm < 1e-6, :] = 0.0
-                scores[:, qnorm < 1e-6] = 0.0
+            scores = score_matrix(vmat, qmat_b, metric)
             if qtags_b is not None:
                 row_tags = [
                     set(t) if t is not None and len(t) else None

@@ -111,14 +111,24 @@ def search_with_cache(
     keyed = with_query_keys(queries, metric, tenant=tenant, index=index, centroids=centroids)
     looked = cache.lookup(keyed, epoch=epoch, metric=metric, cost=cost, now=now).cache()
 
-    hits = looked.filter(F.col("cache_tier").isNotNull())
-    misses = looked.filter(F.col("cache_tier").isNull())
     # one action: NULL-tier row count = misses, the rest = per-tier hits
     all_counts = {
         r["cache_tier"]: r["count"]
         for r in looked.groupBy("cache_tier").count().collect()
     }
     n_miss = int(all_counts.pop(None, 0))
+    if n_miss > 0 and cache.exists():
+        # write_back below appends to the cache table's path, and Spark then
+        # re-materializes every cached plan that reads that path: `looked`
+        # would see this batch's misses as L0 hits and the result would
+        # return each of them twice. Pin a path-free copy of the lookup
+        # before the write. unpersist() does not reach a checkpoint: Spark
+        # frees its blocks once the result is garbage-collected.
+        pinned = looked.localCheckpoint(eager=True)
+        looked.unpersist()
+        looked = pinned
+    hits = looked.filter(F.col("cache_tier").isNotNull())
+    misses = looked.filter(F.col("cache_tier").isNull())
     cache_ms = (_time.time() - t0) * 1000
 
     tier_counts = all_counts

@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyrope_spark.operators.knn import RESULT_SCHEMA
+from pyrope_spark.operators.knn import RESULT_SCHEMA, score_matrix
 from pyrope_spark.operators.topk import topk_per_group
 
 SEGMENT_SCHEMA = (
@@ -468,32 +468,21 @@ def segment_knn(
     k: int,
     metric: str,
     probes: dict[int, list[int]] | None = None,
-    exclude_ids: frozenset | set | None = None,
 ) -> DataFrame:
     """Top-K scan over segment rows. ``probes`` maps cluster_id -> indices of
-    the queries probing it (None = every query scans every segment).
-
-    ``exclude_ids`` (small, broadcast) drops those ids INSIDE the kernel
-    before scoring — the delta index's head-shadow set. Excluding pre-cut
-    makes k tail candidates exact with NO over-fetch (the round-1 design
-    fetched k + |head| and anti-joined after, which degenerates as the head
-    grows; VERDICT item 6)."""
+    the queries probing it (None = every query scans every segment)."""
     spark = segments.sparkSession
     qids = [q for q, _ in queries_np]
     qmat = np.asarray([v for _, v in queries_np], dtype=np.float64)
-    excl = np.asarray(sorted(exclude_ids), dtype=object) if exclude_ids else None
-    bq = spark.sparkContext.broadcast((qids, qmat, probes, excl))
+    bq = spark.sparkContext.broadcast((qids, qmat, probes))
     kk = max(k, 1)
 
     if probes is not None:
         segments = segments.filter(F.col("cluster_id").isin(sorted(probes)))
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_b, qmat_b, probes_b, excl_b = bq.value
+        qids_b, qmat_b, probes_b = bq.value
         nq_all = len(qids_b)
-        if metric == "cosine":
-            qn = np.linalg.norm(qmat_b, axis=1)
-            qdir = qmat_b / np.where(qn < 1e-6, 1.0, qn)[:, None]
         for pdf in batches:
             for row in pdf.itertuples(index=False):
                 sub = (
@@ -504,29 +493,8 @@ def segment_knn(
                 if not sub:
                     continue
                 mat = np.frombuffer(row.vecs, dtype=np.float32).reshape(row.n, row.dim)
-                vmat = mat.astype(np.float64)
                 ids = np.asarray(row.ids, dtype=object)
-                if excl_b is not None:
-                    keep = ~np.isin(ids, excl_b)
-                    if not keep.all():
-                        vmat = vmat[keep]
-                        ids = ids[keep]
-                    if ids.size == 0:
-                        continue
-                Q = qmat_b[sub]
-                if metric == "ip":
-                    scores = vmat @ Q.T
-                elif metric == "l2":
-                    v2 = np.einsum("ij,ij->i", vmat, vmat)[:, None]
-                    q2 = np.einsum("ij,ij->i", Q, Q)[None, :]
-                    scores = -(v2 - 2.0 * (vmat @ Q.T) + q2)
-                else:
-                    vn = np.linalg.norm(vmat, axis=1)
-                    vdir = vmat / np.where(vn < 1e-6, 1.0, vn)[:, None]
-                    scores = vdir @ qdir[sub].T
-                    scores[vn < 1e-6, :] = 0.0
-                    # zero-norm QUERY guard, matching knn._score_gemm
-                    scores[:, qn[sub] < 1e-6] = 0.0
+                scores = score_matrix(mat.astype(np.float64), qmat_b[sub], metric)
                 top = min(kk, scores.shape[0])
                 idx = topk_rows_det(scores, ids, top)
                 flat = idx.T.ravel()
@@ -698,11 +666,16 @@ def segment_knn_partials(
     small-batch search is a single narrow Spark job: the local-mode analog
     of the reference's single-pass in-RAM scan
     (``BruteForceVectorIndex.cs:118-160``), and at cluster scale the merge
-    input stays tiny (partitions x queries x k rows)."""
+    input stays tiny (partitions x queries x k rows).
+
+    ``exclude_ids`` (small, broadcast) drops those ids INSIDE the kernel
+    before scoring, by a set lookup per id — the delta index's head-shadow
+    set. Masking before the cut keeps k tail candidates per query exact
+    with no over-fetch."""
     spark = segments.sparkSession
     qids = [q for q, _ in queries_np]
     qmat = np.asarray([v for _, v in queries_np], dtype=np.float64)
-    excl = np.asarray(sorted(exclude_ids), dtype=object) if exclude_ids else None
+    excl = frozenset(exclude_ids) if exclude_ids else None
     bq = spark.sparkContext.broadcast((qids, qmat, probes, excl))
     kk = max(k, 1)
 
@@ -712,9 +685,6 @@ def segment_knn_partials(
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids_b, qmat_b, probes_b, excl_b = bq.value
         nq_all = len(qids_b)
-        if metric == "cosine":
-            qn = np.linalg.norm(qmat_b, axis=1)
-            qdir = qmat_b / np.where(qn < 1e-6, 1.0, qn)[:, None]
         # running per-query top-K across every segment row in this partition
         best_s: dict[int, np.ndarray] = {}
         best_i: dict[int, np.ndarray] = {}
@@ -727,29 +697,18 @@ def segment_knn_partials(
                 )
                 if not sub:
                     continue
-                mat = np.frombuffer(row.vecs, dtype=np.float32).reshape(row.n, row.dim)
-                vmat = mat.astype(np.float64)
+                vmat = np.frombuffer(row.vecs, dtype=np.float32).reshape(row.n, row.dim)
                 ids = np.asarray(row.ids, dtype=object)
                 if excl_b is not None:
-                    keep = ~np.isin(ids, excl_b)
+                    keep = np.fromiter(
+                        (i not in excl_b for i in ids), dtype=bool, count=len(ids)
+                    )
                     if not keep.all():
                         vmat = vmat[keep]
                         ids = ids[keep]
                     if ids.size == 0:
                         continue
-                Q = qmat_b[sub]
-                if metric == "ip":
-                    scores = vmat @ Q.T
-                elif metric == "l2":
-                    v2 = np.einsum("ij,ij->i", vmat, vmat)[:, None]
-                    q2 = np.einsum("ij,ij->i", Q, Q)[None, :]
-                    scores = -(v2 - 2.0 * (vmat @ Q.T) + q2)
-                else:
-                    vn = np.linalg.norm(vmat, axis=1)
-                    vdir = vmat / np.where(vn < 1e-6, 1.0, vn)[:, None]
-                    scores = vdir @ qdir[sub].T
-                    scores[vn < 1e-6, :] = 0.0
-                    scores[:, qn[sub] < 1e-6] = 0.0
+                scores = score_matrix(vmat.astype(np.float64), qmat_b[sub], metric)
                 top = min(kk, scores.shape[0])
                 idx = topk_rows_det(scores, ids, top)
                 for j, qi in enumerate(sub):
@@ -840,11 +799,9 @@ def knn_bruteforce_packed(
 def ivf_search_packed(
     segments: DataFrame, model, queries: DataFrame, k: int, nprobe: int = 3,
     *, query_id_col: str = "query_id", query_vector_col: str = "vector",
-    exclude_ids: frozenset | set | None = None,
 ) -> DataFrame:
     """IVF probe over packed segments: probe selection driver-side, segment
-    pruning by cluster, GEMM per probed segment. ``exclude_ids`` masks rows
-    inside the scan (see :func:`segment_knn`)."""
+    pruning by cluster, GEMM per probed segment."""
     from pyrope_spark.operators.ivf import select_probes
 
     qrows = [
@@ -857,9 +814,7 @@ def ivf_search_packed(
     for qid, c in pairs:
         probes.setdefault(int(c), []).append(qidx[qid])
     qnp = [(q, np.asarray(v)) for q, v in qrows]
-    return segment_knn(
-        segments, qnp, k, model.metric, probes=probes, exclude_ids=exclude_ids
-    )
+    return segment_knn(segments, qnp, k, model.metric, probes=probes)
 
 
 def ivf_pq_search_distributed(

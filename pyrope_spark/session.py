@@ -45,6 +45,11 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # listing a dataset of more than 32 leaf dirs (e.g. 100 cluster_id=
+        # segment dirs) is a Spark job with one task per dir by default;
+        # one task per core lists the same dirs in one wave (0.65 -> 0.11 s
+        # for 100 dirs on a 4-core host)
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cores))
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()

@@ -33,6 +33,7 @@ import shutil
 import uuid
 from datetime import datetime, timezone
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -62,6 +63,13 @@ RECORD_SCHEMA = T.StructType(
 DATA_COLS = [f.name for f in RECORD_SCHEMA.fields]
 
 
+def _latest(df: DataFrame) -> DataFrame:
+    """Keep each key's newest record (highest ``_seq``): the store's
+    latest-wins rule."""
+    w = Window.partitionBy(*KEY_COLS).orderBy(F.desc("_seq"))
+    return df.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
+
+
 class DuplicateIdError(ValueError):
     """Reference: "Vector already exists" (VectorCommandSet.cs:605-610)."""
 
@@ -73,6 +81,9 @@ class VectorStore:
         self.head_path = os.path.join(base_path, "head")
         self.tail_path = os.path.join(base_path, "tail")
         self.registry = IndexRegistry(os.path.join(base_path, "registry.json"))
+        # index dir -> (build id, segment relation, centroids), filled and
+        # checked by operators.delta_index.load_delta_index
+        self.index_cache: dict[str, tuple] = {}
         os.makedirs(base_path, exist_ok=True)
 
     # ---------------------------------------------------------------- reads
@@ -95,10 +106,51 @@ class VectorStore:
         partitions — equality predicates on the partition columns, so the
         scan prunes to only the touched directories (verified by
         ``tests/test_store.py`` plan assertion)."""
-        df = self._scan(tenant_id, index_name, pairs)
-        w = Window.partitionBy(*KEY_COLS).orderBy(F.desc("_seq"))
+        return _latest(self._scan(tenant_id, index_name, pairs))
+
+    def _head_of(self, tenant_id: str, index_name: str) -> DataFrame:
+        return self._read(self.head_path).filter(
+            (F.col("tenant_id") == tenant_id) & (F.col("index_name") == index_name)
+        )
+
+    def head(self, tenant_id: str, index_name: str) -> DataFrame:
+        """Latest-wins resolved view of one index's HEAD only, including
+        tombstones: the writes since the last compaction."""
+        return _latest(self._head_of(tenant_id, index_name))
+
+    def collect_head(
+        self, tenant_id: str, index_name: str, max_rows: int
+    ) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
+        """:meth:`head`, resolved on the driver: ``(ids, deleted, vectors)``
+        with one entry per head id (its highest-``_seq`` record) and
+        ``vectors`` a float32 (n x dim) matrix.
+
+        The raw head records come back as one Arrow table in one Spark job,
+        bounded to ``max_rows + 1`` records. More than ``max_rows`` raw
+        records returns None: compaction is overdue and the head does not
+        belong on the driver."""
+        raw = (
+            self._head_of(tenant_id, index_name)
+            .select("id", "deleted", "_seq", "vector")
+            .limit(max_rows + 1)
+            .toArrow()
+        )
+        if raw.num_rows > max_rows:
+            return None
+        keys = raw.select(["id", "_seq"]).to_pandas()
+        # stable sort by _seq, keep each id's last (newest) record
+        rows = (
+            keys.sort_values("_seq", kind="stable")
+            .drop_duplicates("id", keep="last")
+            .index.to_numpy()
+        )
+        vec = raw.column("vector").combine_chunks()
+        dim = len(vec[0]) if len(vec) else 0
+        vectors = vec.flatten().to_numpy(zero_copy_only=False).reshape(len(vec), dim)[rows]
         return (
-            df.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
+            keys["id"].to_numpy(dtype=object)[rows],
+            raw.column("deleted").to_numpy()[rows],
+            vectors,
         )
 
     def _scan(

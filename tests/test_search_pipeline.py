@@ -91,3 +91,33 @@ def test_trace_fields_and_rows(spark, tmp_path):
     assert tr["q0"]["cache_hit"] is False
     assert tr["q0"]["info"] == "compute"
     assert tr["q0"]["n_hits"] == 10
+
+
+def test_mixed_batch_returns_each_miss_once(spark, tmp_path):
+    """Batch 2 mixes queries warmed by batch 1 with fresh ones. The write-back
+    of the fresh ones must not make them come back a second time as L0 hits:
+    every query returns exactly k rows, misses only as 'compute'."""
+    vectors = make_vectors_df(spark, n=200, dim=8, del_frac=0.0).cache()
+    warm = make_queries_df(spark, n=4, dim=8, k=5, seed=11)
+    fresh = make_queries_df(spark, n=4, dim=8, k=5, seed=12).withColumn(
+        "query_id", F.concat(F.lit("fresh_"), F.col("query_id"))
+    )
+    cache = ResultCacheTable(spark, str(tmp_path / "rc_mixed"))
+    r1, _ = search_with_cache(vectors, warm, cache, k=5, metric="l2", epoch=1, n=200, dim=8)
+    r1.collect()
+
+    r2, s2 = search_with_cache(
+        vectors, warm.unionByName(fresh), cache, k=5, metric="l2", epoch=1, n=200, dim=8
+    )
+    rows = r2.collect()
+    for dep in r2._pyrope_cached_deps:
+        dep.unpersist()
+    assert s2.misses == 4 and s2.hits_by_tier == {"L0": 4}
+    per_query: dict = {}
+    for r in rows:
+        per_query.setdefault(r["query_id"], []).append(r["served_from"])
+    assert len(per_query) == 8
+    for qid, served in per_query.items():
+        assert len(served) == 5, (qid, served)
+        want = "compute" if qid.startswith("fresh_") else "L0"
+        assert set(served) == {want}, (qid, served)
