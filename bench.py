@@ -717,7 +717,7 @@ def main() -> None:
     timed(f"sq8_encode_scan_{N_VECTORS}v", sq8, repeat=2)
 
     # SQ8-packed segment scan (4x less bandwidth than f32 segments)
-    from pyrope_spark.operators.segments import pack_segments_sq8, segment_knn_sq8
+    from pyrope_spark.operators.segments import pack_segments_sq8, segment_knn
 
     def pack_sq8():
         seg = pack_segments_sq8(vectors, rows_per_segment=8192).cache()
@@ -729,12 +729,12 @@ def main() -> None:
         pack_sq8()
     if "seg_sq8" in state:
         def bf_sq8():
-            segment_knn_sq8(state["seg_sq8"], qnp, TOP_K, "l2").count()
+            segment_knn(state["seg_sq8"], qnp, TOP_K, "l2", scoring="dequant").count()
 
         timed(f"bf_sq8_{N_VECTORS}v_d{DIM}_q{N_QUERIES}", bf_sq8, repeat=3)
 
         def bf_sq8_byte():
-            segment_knn_sq8(state["seg_sq8"], qnp, TOP_K, "l2", scoring="byte").count()
+            segment_knn(state["seg_sq8"], qnp, TOP_K, "l2", scoring="byte").count()
 
         timed(f"bf_sq8_byte_{N_VECTORS}v_d{DIM}_q{N_QUERIES}", bf_sq8_byte, repeat=3)
 
@@ -742,7 +742,7 @@ def main() -> None:
         # batch is job-overhead-dominated (VERDICT r5 — the one >2x row had
         # no q1000 twin to prove amortization)
         def bf_sq8_byte_1k():
-            segment_knn_sq8(
+            segment_knn(
                 state["seg_sq8"], qnp_1k, TOP_K, "l2", scoring="byte"
             ).count()
 
@@ -1271,7 +1271,7 @@ def main() -> None:
         # post-clearCache min-of-3 rows.
         from pyrope_spark.operators.segments import (
             pack_segments_sq8 as _pk8,
-            segment_knn_sq8 as _knn8,
+            segment_knn as _knn8,
         )
 
         seg_iso = _pk8(vectors, rows_per_segment=8192).cache()

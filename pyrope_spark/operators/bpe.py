@@ -123,9 +123,10 @@ def _apply_merge_fn(left: str, right: str):
 #: this many distinct words.  Natural-language vocabularies are bounded
 #: (even web-scale corpora stay in the low tens of millions of distinct
 #: words), so the loop's input is tiny compared to the corpus — the same
-#: bounded-collect convention as ``pq.train_pq(impl='numpy')``, where M
-#: distributed MLlib fits over a capped sample were pure scheduling
-#: overhead.  Above the cap the distributed per-iteration loop runs.
+#: bounded-collect convention as ``pq.train_pq``, whose driver-side fit
+#: replaced M distributed MLlib fits over a capped sample that were pure
+#: scheduling overhead.  Above the cap the distributed per-iteration loop
+#: runs.
 DRIVER_VOCAB_CAP = 2_000_000
 
 #: Second gate on the auto driver path (r10 ADVICE): a row count alone
@@ -170,17 +171,20 @@ def bpe_train(
     if impl not in ("auto", "driver", "spark"):
         raise ValueError(f"unknown impl {impl!r}")
     spark = df.sparkSession
-    if impl in ("auto", "driver"):
-        wf = word_freqs(df, text_col=text_col)
-        if impl == "driver":
-            return _bpe_train_driver(
-                spark, wf.collect(), num_merges=num_merges,
-                min_pair_freq=min_pair_freq,
-            )
+    wf = word_freqs(df, text_col=text_col)
+    if impl == "driver":
+        return _bpe_train_driver(
+            spark, wf.collect(), num_merges=num_merges,
+            min_pair_freq=min_pair_freq,
+        )
+    if impl == "auto":
         # cheap 1-row probe before any collect (r10 ADVICE): gate the
         # driver path on BOTH distinct-word count and total word bytes,
         # so an adversarial vocabulary (huge count OR huge words) falls
-        # through to the distributed loop without shipping Rows first
+        # through to the distributed loop without shipping Rows first.
+        # The vocab-sized table is persisted first, so the probe and the
+        # collect (or the loop's first vocab) aggregate the corpus once.
+        wf = wf.persist()
         probe = wf.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.length("word")).alias("chars"),
@@ -189,15 +193,16 @@ def bpe_train(
             int(probe["n"] or 0) <= DRIVER_VOCAB_CAP
             and int(probe["chars"] or 0) <= DRIVER_VOCAB_CHARS_CAP
         ):
+            rows = wf.collect()
+            wf.unpersist()
             return _bpe_train_driver(
-                spark, wf.collect(), num_merges=num_merges,
-                min_pair_freq=min_pair_freq,
+                spark, rows, num_merges=num_merges, min_pair_freq=min_pair_freq,
             )
     vocab = (
-        word_freqs(df, text_col=text_col)
-        .select("word", "freq", _chars("word").alias("syms"))
+        wf.select("word", "freq", _chars("word").alias("syms"))
         .localCheckpoint(eager=True)
     )
+    wf.unpersist()
     merges: list[tuple[int, str, str, int]] = []
     for step in range(1, num_merges + 1):
         top = (

@@ -1001,6 +1001,13 @@ def semantic_dedup(
 
 # --------------------------------------------------- connected components
 
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint``-ed DataFrame now.
+    ``DataFrame.unpersist`` does not reach the checkpointed RDD under the
+    plan, so release that RDD itself."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def connected_components(
     edges: DataFrame,
     *,
@@ -1034,7 +1041,10 @@ def connected_components(
     bookkeeping; per-round checkpointing bounds the plan at one round's
     shape regardless of diameter (values unchanged — asserted by the
     connected_components_star equivalence test; long-diameter graphs
-    should still prefer [[connected_components_star]] outright).
+    should still prefer [[connected_components_star]] outright). Once a
+    round's labels are materialized, the previous round's checkpoint is
+    released, so block-manager storage holds at most two label tables and
+    the edge table, not one label table per round.
 
     Raises after ``max_iter`` rounds without convergence rather than
     returning partially-merged groups silently.
@@ -1048,6 +1058,7 @@ def connected_components(
         sym.select("id").distinct().withColumn("label", F.col("id"))
         .localCheckpoint(eager=True)
     )
+    prev = labels
     sym = sym.localCheckpoint(eager=True)
     for _round in range(max_iter):
         # min label among neighbors, via the neighbor's current label
@@ -1068,9 +1079,12 @@ def connected_components(
                 ),
             )
         ).localCheckpoint(eager=True)
+        _release_checkpoint(prev)
+        prev = nxt
         changed = nxt.filter("_chg").limit(1).count()
         labels = nxt.select("id", "label")
         if changed == 0:
+            _release_checkpoint(sym)
             return labels.select("id", F.col("label").alias("component"))
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds "

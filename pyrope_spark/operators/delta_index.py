@@ -41,11 +41,11 @@ from pyrope_spark.operators.ivf import DEFAULT_NPROBE, IvfModel, build_ivf
 from pyrope_spark.operators.knn import knn_bruteforce, score_matrix
 from pyrope_spark.operators.segments import (
     SEGMENT_SCHEMA,
+    _topk_frame,
     ivf_search_packed,
     ivf_search_packed_single_job,
     merge_topk_partials,
     pack_segments,
-    topk_rows_det,
     write_segments,
 )
 from pyrope_spark.operators.topk import topk_per_group
@@ -74,20 +74,7 @@ def build_delta_index(
     if metric is None:
         metric = meta.metric if meta else "l2"
     store.compact()
-    # r11 opt (guide §2.4): compact() just wrote the latest-wins resolved
-    # snapshot as the tail and emptied the head, so the live view here is
-    # a plain pruned tail read + tombstone filter; store.live() would
-    # re-run the whole snapshot window (a full-table shuffle) only to
-    # assign every already-unique key row_number 1
-    live = (
-        store._read(store.tail_path)
-        .filter(
-            (F.col("tenant_id") == tenant_id)
-            & (F.col("index_name") == index_name)
-        )
-        .filter(~F.col("deleted"))
-    )
-    assigned, model = build_ivf(live, nlist=nlist, metric=metric)
+    assigned, model = build_ivf(store.live(tenant_id, index_name), nlist=nlist, metric=metric)
     seg = pack_segments(
         assigned, id_col="id", vector_col="vector", cluster_col="cluster_id",
         rows_per_segment=rows_per_segment,
@@ -237,17 +224,8 @@ def delta_search(
     )
     live = ~deleted
     if live.any():
-        ids = head_ids[live]
         scores = score_matrix(vectors[live].astype(np.float64), qmat, model.metric)
-        top = min(max(k, 1), len(ids))
-        flat = topk_rows_det(scores, ids, top).T.ravel()
-        head_hits = pd.DataFrame(
-            {
-                "query_id": np.repeat(np.asarray(qids, dtype=object), top),
-                "id": ids[flat],
-                "score": scores[flat, np.repeat(np.arange(len(qids)), top)],
-            }
-        )
+        head_hits = _topk_frame(scores, head_ids[live], qids, max(k, 1))
         out = merge_topk_partials(
             pd.concat([out.drop(columns="rank"), head_hits], ignore_index=True), k
         )

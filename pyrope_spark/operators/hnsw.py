@@ -30,9 +30,8 @@ graph semantics (``HnswVectorIndex.cs:95-357``):
   normalized vectors; scores returned higher-is-better with the same
   conversion as ``Search`` (:249-262).
 
-``hnswlib`` is used instead when installed (`impl='hnswlib'`); the numpy
-graph is the default so the operator runs — and is recall-tested — in any
-environment.
+The numpy graph has no native dependency, so the operator runs — and is
+recall-tested — in any environment.
 """
 
 from __future__ import annotations
@@ -46,16 +45,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyrope_spark.operators.knn import RESULT_SCHEMA
+from pyrope_spark.operators.knn import RESULT_SCHEMA, score_matrix
+from pyrope_spark.operators.segments import _topk_frame
 from pyrope_spark.operators.topk import topk_per_group
-
-try:  # pragma: no cover - availability depends on the environment
-    import hnswlib  # type: ignore
-
-    HAVE_HNSWLIB = True
-except ImportError:
-    hnswlib = None
-    HAVE_HNSWLIB = False
 
 DEFAULT_M = 16  # reference HnswVectorIndex.cs:30
 DEFAULT_EF_CONSTRUCTION = 200
@@ -525,7 +517,6 @@ def hnsw_partition_search(
     m: int = DEFAULT_M,
     ef_construction: int = DEFAULT_EF_CONSTRUCTION,
     ef_search: int = DEFAULT_EF_SEARCH,
-    impl: str = "numpy",
     fallback_bruteforce: bool = False,
     seed: int = 42,
     max_shard_rows: int = 100_000,
@@ -534,10 +525,8 @@ def hnsw_partition_search(
     """Per-partition ANN: each task builds a local HNSW graph over its shard
     and answers every query against it; the global window keeps the best K.
 
-    ``impl='numpy'`` (default) uses :class:`NumpyHnsw` — runs everywhere.
-    ``impl='hnswlib'`` uses the C library when installed (faster builds at
-    large shard sizes). ``fallback_bruteforce=True`` swaps the local scorer
-    for exact numpy (plumbing tests).
+    The local scorer is :class:`NumpyHnsw`; ``fallback_bruteforce=True``
+    swaps it for the exact numpy scan (plumbing tests).
 
     ``max_shard_rows`` bounds the per-partition graph size (VERDICT r2 item
     4): tables larger than one shard are round-robin repartitioned so every
@@ -550,8 +539,6 @@ def hnsw_partition_search(
     caller already knows it — it only sizes the repartition, and skipping
     the ``count()`` action removes a full table scan from every repeated
     search call over an uncached corpus."""
-    if impl == "hnswlib" and not HAVE_HNSWLIB:
-        raise NotImplementedError("hnswlib is not installed; use impl='numpy'")
     if max_shard_rows < 1:
         raise ValueError("max_shard_rows must be >= 1")
     n_total = vectors.count() if num_rows is None else num_rows
@@ -563,7 +550,6 @@ def hnsw_partition_search(
     qids = [r[0] for r in qrows]
     qmat = np.asarray([r[1] for r in qrows], dtype=np.float32)
     bq = spark.sparkContext.broadcast((qids, qmat))
-    space = {"l2": "l2", "ip": "ip", "cosine": "cosine"}[metric]
     kk = max(k, 1)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -576,53 +562,16 @@ def hnsw_partition_search(
         if not ids_all:
             return
         mat = np.asarray(vecs, dtype=np.float32)
-        n = len(ids_all)
-        top = min(kk, n)
         if fallback_bruteforce:
-            q64 = qmat_b.astype(np.float64)
-            v64 = mat.astype(np.float64)
-            if metric == "ip":
-                scores = v64 @ q64.T
-            elif metric == "l2":
-                v2 = np.einsum("ij,ij->i", v64, v64)[:, None]
-                q2 = np.einsum("ij,ij->i", q64, q64)[None, :]
-                scores = -(v2 - 2.0 * (v64 @ q64.T) + q2)
-            else:
-                vn = np.linalg.norm(v64, axis=1)
-                qn = np.linalg.norm(q64, axis=1)
-                scores = (v64 / np.where(vn < 1e-6, 1, vn)[:, None]) @ (
-                    q64 / np.where(qn < 1e-6, 1, qn)[:, None]
-                ).T
-                scores[vn < 1e-6, :] = 0.0
-                scores[:, qn < 1e-6] = 0.0
-            idx = np.argpartition(-scores, top - 1, axis=0)[:top, :]
-            flat = idx.T.ravel()
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(np.asarray(qids_b, dtype=object), top),
-                    "id": np.asarray(ids_all, dtype=object)[flat],
-                    "score": scores[flat, np.repeat(np.arange(len(qids_b)), top)],
-                }
+            scores = score_matrix(
+                mat.astype(np.float64), qmat_b.astype(np.float64), metric
             )
-        elif impl == "hnswlib" and HAVE_HNSWLIB:
-            index = hnswlib.Index(space=space, dim=mat.shape[1])
-            index.init_index(max_elements=n, ef_construction=ef_construction, M=m)
-            index.add_items(mat, np.arange(n))
-            index.set_ef(max(ef_search, top))
-            labels, dists = index.knn_query(qmat_b, k=top)
-            scores = -dists if space == "l2" else 1.0 - dists
-            for j, qid in enumerate(qids_b):
-                yield pd.DataFrame(
-                    {
-                        "query_id": [qid] * labels.shape[1],
-                        "id": [ids_all[i] for i in labels[j]],
-                        "score": scores[j].astype(np.float64),
-                    }
-                )
+            yield _topk_frame(scores, np.asarray(ids_all, dtype=object), qids_b, kk)
         else:
             graph = NumpyHnsw(
                 mat, metric=metric, m=m, ef_construction=ef_construction, seed=seed
             )
+            top = min(kk, len(ids_all))
             out_q, out_i, out_s = [], [], []
             for j, qid in enumerate(qids_b):
                 for i, score in graph.search(qmat_b[j], top, ef_search=ef_search):

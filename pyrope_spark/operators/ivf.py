@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyrope_spark.functions.vector import normalize_metric
-from pyrope_spark.operators.knn import knn_bruteforce
+from pyrope_spark.operators.knn import knn_bruteforce, score_matrix
 
 DEFAULT_NPROBE = 3  # reference: IvfFlatVectorIndex.cs:14
 DEFAULT_SEED = 42  # reference: IvfFlatVectorIndex.cs:116
@@ -394,6 +394,8 @@ def _ivf_score_gemm(
 
     from pyrope_spark.operators.knn import RESULT_SCHEMA
 
+    from pyrope_spark.operators.segments import _topk_frame
+
     spark = cand.sparkSession
     qids = [q for q, _ in qrows]
     qmat = np.asarray([v for _, v in qrows], dtype=np.float64)
@@ -407,42 +409,22 @@ def _ivf_score_gemm(
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids_b, qmat_b, byc = bq.value
-        if metric == "cosine":
-            qn = np.linalg.norm(qmat_b, axis=1)
-            qdir = qmat_b / np.where(qn < 1e-6, 1.0, qn)[:, None]
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_q, out_i, out_s = [], [], []
+            frames = []
             for c, grp in pdf.groupby(cluster_col):
                 sub = byc.get(int(c))
                 if not sub:
                     continue
                 vmat = np.vstack(grp[vector_col].to_numpy()).astype(np.float64)
-                ids = grp[id_col].astype(str).to_numpy()
-                Q = qmat_b[sub]
-                if metric == "ip":
-                    scores = vmat @ Q.T
-                elif metric == "l2":
-                    v2 = np.einsum("ij,ij->i", vmat, vmat)[:, None]
-                    q2 = np.einsum("ij,ij->i", Q, Q)[None, :]
-                    scores = -(v2 - 2.0 * (vmat @ Q.T) + q2)
-                else:
-                    vn = np.linalg.norm(vmat, axis=1)
-                    vdir = vmat / np.where(vn < 1e-6, 1.0, vn)[:, None]
-                    scores = vdir @ qdir[sub].T
-                    scores[vn < 1e-6, :] = 0.0
-                from pyrope_spark.operators.segments import topk_rows_det
-
-                top = min(kk, scores.shape[0])
-                idx = topk_rows_det(scores, ids, top)
-                for j, qi in enumerate(sub):
-                    rows = idx[:, j]
-                    out_q.extend([qids_b[qi]] * len(rows))
-                    out_i.extend(ids[rows])
-                    out_s.extend(scores[rows, j])
-            if out_q:
-                yield pd.DataFrame({"query_id": out_q, "id": out_i, "score": out_s})
+                scores = score_matrix(vmat, qmat_b[sub], metric)
+                frames.append(
+                    _topk_frame(
+                        scores, grp[id_col].astype(str).to_numpy(),
+                        [qids_b[i] for i in sub], kk,
+                    )
+                )
+            if frames:
+                yield pd.concat(frames, ignore_index=True)
 
     cols = cand.select(
         F.col(id_col).cast("string").alias(id_col), F.col(cluster_col), F.col(vector_col)
@@ -564,6 +546,7 @@ def ivf_search_packed_distributed(
     import pandas as pd
 
     from pyrope_spark.operators.knn import RESULT_SCHEMA
+    from pyrope_spark.operators.segments import _segment_matrix, _topk_frame
     from pyrope_spark.operators.topk import topk_per_group
 
     probed = select_probes_distributed(
@@ -584,39 +567,13 @@ def ivf_search_packed_distributed(
             .reshape(len(q_pdf), -1)
             .astype(np.float64)
         )
-        if metric == "cosine":
-            qn = np.linalg.norm(qmat, axis=1)
-            qdir = qmat / np.where(qn < 1e-6, 1.0, qn)[:, None]
-        out = []
-        for row in seg_pdf.itertuples(index=False):
-            vmat = np.frombuffer(row.vecs, dtype=np.float32).reshape(row.n, row.dim).astype(np.float64)
-            ids = np.asarray(row.ids, dtype=object)
-            if metric == "ip":
-                scores = vmat @ qmat.T
-            elif metric == "l2":
-                v2 = np.einsum("ij,ij->i", vmat, vmat)[:, None]
-                q2 = np.einsum("ij,ij->i", qmat, qmat)[None, :]
-                scores = -(v2 - 2.0 * (vmat @ qmat.T) + q2)
-            else:
-                vn = np.linalg.norm(vmat, axis=1)
-                vdir = vmat / np.where(vn < 1e-6, 1.0, vn)[:, None]
-                scores = vdir @ qdir.T
-                scores[vn < 1e-6, :] = 0.0
-                scores[:, qn < 1e-6] = 0.0
-            from pyrope_spark.operators.segments import topk_rows_det
-
-            top = min(kk, scores.shape[0])
-            idx = topk_rows_det(scores, ids, top)
-            flat = idx.T.ravel()
-            out.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids, top),
-                        "id": ids[flat],
-                        "score": scores[flat, np.repeat(np.arange(len(qids)), top)],
-                    }
-                )
+        out = [
+            _topk_frame(
+                score_matrix(_segment_matrix(row, "float"), qmat, metric),
+                np.asarray(row.ids, dtype=object), qids, kk,
             )
+            for row in seg_pdf.itertuples(index=False)
+        ]
         return pd.concat(out, ignore_index=True)
 
     scored = (

@@ -11,9 +11,9 @@ Reference:
   encode (``IvfPqVectorIndex.cs:55-116``).
 
 Spark-first:
-- Training fits M MLlib KMeans models over ``slice``-ed subvectors — each fit
-  is a distributed job; M is small (4..16), so the loop is driver-side control
-  flow only.
+- Training collects a bounded seeded sample once and fits the M subspace
+  codebooks driver-side (:func:`train_pq_np`); the sample is capped by
+  construction, so distributed fits would be pure scheduling overhead.
 - Encoding and ADC scoring are Arrow-batched numpy (``mapInPandas``): codes
   via one argmin over a broadcast (M, K, dsub) codebook; ADC via fancy-indexed
   table lookups. Both emit per-batch partial top-K, so the shuffle carries
@@ -29,13 +29,12 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.ml.clustering import KMeans
-from pyspark.ml.functions import array_to_vector
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pyrope_spark.operators.knn import RESULT_SCHEMA
+from pyrope_spark.operators.segments import _topk_frame
 from pyrope_spark.operators.topk import topk_per_group
 
 PQ_SEED = 42  # reference: ProductQuantizer.cs per-subspace seed 42+m
@@ -101,7 +100,6 @@ def train_pq(
     seed: int = PQ_SEED,
     max_iter: int = DEFAULT_MAX_ITER,
     fit_fraction: float | None = None,
-    impl: str = "numpy",
 ) -> PqModel:
     """Per-subspace KMeans (reference ProductQuantizer.cs:16-58: dim % M == 0,
     K <= 256, seed 42+m).
@@ -111,20 +109,18 @@ def train_pq(
     subspace fits on that seeded sample (codebook quality saturates well
     below it). Encoding always covers every row.
 
-    ``impl='numpy'`` (default) collects the BOUNDED sample once and fits all
-    M codebooks driver-side with seeded k-means++/Lloyd — the faiss recipe:
-    the training set is capped by construction (<= max(10k, 256k) rows x
-    dim floats, tens of MB), so M distributed MLlib jobs over it are pure
-    scheduling overhead. Measured at 100k x d128 M=8: the 8 sequential
-    MLlib fits were ~25-30 s of the 35-45 s IVF-PQ build; the numpy fit is
-    GEMM-bound seconds (PLANS.md r4). ``impl='mllib'`` keeps the
-    distributed fits (the path to use if the cap is ever lifted)."""
+    The BOUNDED sample is collected once and all M codebooks fit
+    driver-side with seeded Lloyd iterations (:func:`train_pq_np`) — the
+    faiss recipe: the training set is capped by construction
+    (<= max(10k, 256k) rows x dim floats, tens of MB), so M distributed
+    MLlib jobs over it are pure scheduling overhead. Measured at 100k x d128
+    M=8: the 8 sequential MLlib fits were ~25-30 s of the 35-45 s IVF-PQ
+    build; the numpy fit is GEMM-bound seconds (PLANS.md r4)."""
     if k > 256:
         raise ValueError("PQ K must be <= 256 (codes are bytes)")
     dim = len(vectors.select(vector_col).first()[0])
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by M={m}")
-    dsub = dim // m
     n = vectors.count()
     kk = min(k, n)
     fit_src = vectors
@@ -134,34 +130,9 @@ def train_pq(
         cap = max(10_000, 256 * kk)
         if n > cap:
             fit_src = vectors.sample(fraction=cap / n, seed=seed)
-    books = []
-    if impl == "numpy":
-        pdf = fit_src.select(F.col(vector_col).alias("_v")).toPandas()
-        mat = np.asarray(pdf["_v"].tolist(), dtype=np.float32)
-        return train_pq_np(mat, m, kk, seed=seed, max_iter=max_iter)
-    cached = fit_src.select(vector_col).cache()
-    try:
-        for sub in range(m):
-            sl = cached.select(
-                array_to_vector(
-                    F.slice(F.col(vector_col), sub * dsub + 1, dsub)
-                ).alias("_features")
-            )
-            km = KMeans(
-                k=kk,
-                maxIter=max_iter,
-                seed=seed + sub,
-                featuresCol="_features",
-                distanceMeasure="euclidean",
-            )
-            model = km.fit(sl)
-            centers = np.asarray(model.clusterCenters(), dtype=np.float64)
-            if len(centers) < kk:  # degenerate duplicate centers
-                centers = np.vstack([centers] + [centers[-1:]] * (kk - len(centers)))
-            books.append(centers)
-    finally:
-        cached.unpersist()
-    return PqModel(codebooks=np.stack(books), m=m, k=kk, dsub=dsub)
+    pdf = fit_src.select(F.col(vector_col).alias("_v")).toPandas()
+    mat = np.asarray(pdf["_v"].tolist(), dtype=np.float32)
+    return train_pq_np(mat, m, kk, seed=seed, max_iter=max_iter)
 
 
 def train_pq_np(
@@ -316,20 +287,10 @@ def pq_adc_search(
             codes = np.vstack(pdf["pq_codes"].to_numpy()).astype(np.int64)  # B x M
             ids = pdf[id_col].astype(str).to_numpy()
             # dist[b, q] = sum_m tables[q, m, codes[b, m]]
-            B = codes.shape[0]
-            dist = np.zeros((B, len(qids_b)), dtype=np.float64)
+            dist = np.zeros((codes.shape[0], len(qids_b)), dtype=np.float64)
             for sub in range(codes.shape[1]):
                 dist += tables_b[:, sub, :][:, codes[:, sub]].T  # B x Q
-            scores = -dist
-            top = min(topn, B)
-            idx = np.argpartition(-scores, top - 1, axis=0)[:top, :]
-            out_q, out_i, out_s = [], [], []
-            for j in range(len(qids_b)):
-                rows = idx[:, j]
-                out_q.extend([qids_b[j]] * len(rows))
-                out_i.extend(ids[rows])
-                out_s.extend(scores[rows, j])
-            yield pd.DataFrame({"query_id": out_q, "id": out_i, "score": out_s})
+            yield _topk_frame(-dist, ids, qids_b, topn)
 
     cand = encoded.select(F.col(id_col).cast("string").alias(id_col), "pq_codes")
     scored = cand.mapInPandas(scan, RESULT_SCHEMA)
@@ -391,6 +352,51 @@ def build_ivf_pq(
     return encoded, IvfPqModel(ivf=ivf_model, pq=pq_model)
 
 
+def _residual_adc_tables(
+    model: IvfPqModel,
+    queries: DataFrame,
+    nprobe: int,
+    query_id_col: str,
+    query_vector_col: str,
+) -> tuple[list, np.ndarray, dict[int, list[int]]]:
+    """Collect the queries, pick their probes, and build one residual ADC
+    table (M x K: ``||(q - centroid)_m - c||²``) per (query, probed
+    cluster). Returns ``(keys, tables, by_cluster)``: ``keys[i]`` is the
+    (query_id, cluster_id) of ``tables[i]``, and ``by_cluster`` maps each
+    probed cluster to its table indices."""
+    from pyrope_spark.operators.ivf import select_probes
+
+    qrows = [
+        (r[query_id_col], list(r[query_vector_col]))
+        for r in queries.select(query_id_col, query_vector_col).collect()
+    ]
+    qvec = {qid: np.asarray(v, dtype=np.float64) for qid, v in qrows}
+    m, dsub, kk = model.pq.m, model.pq.dsub, model.pq.k
+    keys, tabs = [], []
+    by_cluster: dict[int, list[int]] = {}
+    for qid, c in select_probes(model.ivf, qrows, nprobe):
+        rq = qvec[qid] - model.ivf.centroids[c]
+        t = np.empty((m, kk), dtype=np.float64)
+        for sub in range(m):
+            qs = rq[sub * dsub : (sub + 1) * dsub]
+            cb = model.pq.codebooks[sub]
+            t[sub] = qs @ qs - 2.0 * (cb @ qs) + np.einsum("ij,ij->i", cb, cb)
+        by_cluster.setdefault(int(c), []).append(len(keys))
+        keys.append((qid, int(c)))
+        tabs.append(t)
+    return keys, np.stack(tabs) if tabs else np.zeros((0, m, kk)), by_cluster
+
+
+def _adc_frame(
+    tabs: np.ndarray, keys: list, idxs: list[int], codes: np.ndarray, ids: np.ndarray, top: int
+) -> pd.DataFrame:
+    """Top-``top`` rows of one (n x M) code block for each of the ADC tables
+    ``idxs``: score = -Σ_m table[m][code[m]] (ProductQuantizer.cs:98-120)."""
+    sub_idx = np.arange(codes.shape[1])[None, :]
+    scores = np.stack([-tabs[ti][sub_idx, codes].sum(axis=1) for ti in idxs], axis=1)
+    return _topk_frame(scores, ids, [keys[ti][0] for ti in idxs], top)
+
+
 def ivf_pq_search(
     encoded: DataFrame,
     model: IvfPqModel,
@@ -406,60 +412,28 @@ def ivf_pq_search(
     (reference IvfPqVectorIndex.cs:118-212). The residual query differs per
     (query, cluster), so tables are built per probe pair — still tiny
     (Q * nprobe * M * K doubles) and broadcast."""
-    from pyrope_spark.operators.ivf import select_probes
-
     spark = encoded.sparkSession
-    qrows = [
-        (r[query_id_col], list(r[query_vector_col]))
-        for r in queries.select(query_id_col, query_vector_col).collect()
-    ]
-    probe_pairs = select_probes(model.ivf, qrows, nprobe)
-    qvec = {qid: np.asarray(v, dtype=np.float64) for qid, v in qrows}
-    m, dsub, kk = model.pq.m, model.pq.dsub, model.pq.k
-    # per (query, cluster) residual ADC table
-    keys = []
-    tabs = []
-    for qid, c in probe_pairs:
-        rq = qvec[qid] - model.ivf.centroids[c]
-        t = np.empty((m, kk), dtype=np.float64)
-        for sub in range(m):
-            qs = rq[sub * dsub : (sub + 1) * dsub]
-            cb = model.pq.codebooks[sub]
-            t[sub] = qs @ qs - 2.0 * (cb @ qs) + np.einsum("ij,ij->i", cb, cb)
-        keys.append((qid, c))
-        tabs.append(t)
-    bt = spark.sparkContext.broadcast((keys, np.stack(tabs) if tabs else np.zeros((0, m, kk))))
-
-    probed = sorted({c for _, c in probe_pairs})
-    cand = encoded.filter(F.col("cluster_id").isin(probed))
+    keys, tabs, by_cluster = _residual_adc_tables(
+        model, queries, nprobe, query_id_col, query_vector_col
+    )
+    bt = spark.sparkContext.broadcast((keys, tabs, by_cluster))
+    cand = encoded.filter(F.col("cluster_id").isin(sorted(by_cluster)))
+    topn = max(k, 1)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keys_b, tabs_b = bt.value
-        by_cluster: dict[int, list[int]] = {}
-        for i, (_, c) in enumerate(keys_b):
-            by_cluster.setdefault(c, []).append(i)
+        keys_b, tabs_b, by_cluster_b = bt.value
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_q, out_i, out_s = [], [], []
-            for c, grp in pdf.groupby("cluster_id"):
-                idxs = by_cluster.get(int(c))
-                if not idxs:
-                    continue
-                codes = np.vstack(grp["pq_codes"].to_numpy()).astype(np.int64)
-                ids = grp[id_col].astype(str).to_numpy()
-                for ti in idxs:
-                    qid = keys_b[ti][0]
-                    t = tabs_b[ti]  # M x K
-                    dist = t[np.arange(codes.shape[1])[None, :], codes].sum(axis=1)
-                    scores = -dist
-                    top = min(max(k, 1), len(scores))
-                    sel = np.argpartition(-scores, top - 1)[:top]
-                    out_q.extend([qid] * len(sel))
-                    out_i.extend(ids[sel])
-                    out_s.extend(scores[sel])
-            if out_q:
-                yield pd.DataFrame({"query_id": out_q, "id": out_i, "score": out_s})
+            frames = [
+                _adc_frame(
+                    tabs_b, keys_b, by_cluster_b[int(c)],
+                    np.vstack(grp["pq_codes"].to_numpy()).astype(np.int64),
+                    grp[id_col].astype(str).to_numpy(), topn,
+                )
+                for c, grp in pdf.groupby("cluster_id")
+                if by_cluster_b.get(int(c))
+            ]
+            if frames:
+                yield pd.concat(frames, ignore_index=True)
 
     scored = cand.select(
         F.col(id_col).cast("string").alias(id_col), "cluster_id", "pq_codes"

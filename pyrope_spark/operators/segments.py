@@ -21,6 +21,25 @@ buffer is a SEGMENT table:
 
 Segments are built once per compaction (the reference rebuilds inverted
 lists at Build() time the same way, ``IvfFlatVectorIndex.cs:85-145``).
+
+Scan kernels. Every kernel decodes a segment row with
+:func:`_segment_matrix` (float32 ``vecs``, SQ8 dequantized, or SQ8 byte
+codes), scores it with :func:`~pyrope_spark.operators.knn.score_matrix` and
+emits per-query top-K rows with :func:`_topk_frame`:
+
+- :func:`segment_knn_partials` — the small-batch scan. The queries are a
+  driver-side list, broadcast to the scan; each task keeps a running top-K
+  per query and emits it once, with no shuffle. The driver merges the
+  partials (:func:`merge_topk_partials`, used by
+  :func:`ivf_search_packed_single_job` and the delta index), or
+  :func:`segment_knn` merges them with ``topk_per_group`` (used by
+  :func:`knn_bruteforce_packed`, :func:`ivf_search_packed` and the SQ8
+  index, whose ``scoring`` picks the dequantized or byte-domain kernel).
+- :func:`segment_knn_distributed` — the large-batch scan. The query table is
+  packed into chunks and block-joined with the segments; no query reaches
+  the driver.
+- :func:`ivf_pq_search_packed` / :func:`ivf_pq_search_distributed` — the
+  ADC scans over PQ code segments, small batch and large batch.
 """
 
 from __future__ import annotations
@@ -41,6 +60,9 @@ SEGMENT_SCHEMA = (
 SQ8_SEGMENT_SCHEMA = (
     "cluster_id int, segment_no int, n int, dim int, ids array<string>, "
     "codes binary, mins binary, maxs binary"
+)
+PQ_SEGMENT_SCHEMA = (
+    "cluster_id int, segment_no int, n int, m int, ids array<string>, codes binary"
 )
 DEFAULT_ROWS_PER_SEGMENT = 65536
 
@@ -66,17 +88,108 @@ def topk_rows_det(scores: np.ndarray, ids: np.ndarray, top: int) -> np.ndarray:
     return idx
 
 
-def topk_flat_det(s: np.ndarray, i: np.ndarray, top: int) -> np.ndarray:
-    """1-d variant of :func:`topk_rows_det`: kept indices, same total order."""
-    if top >= len(s):
-        return np.arange(len(s))
-    keep = np.argpartition(-s, top - 1)[:top]
-    bound = s[keep].min()
-    if (s >= bound).sum() > top:
-        cand = np.nonzero(s >= bound)[0]
-        order = np.lexsort((i[cand].astype("U"), -s[cand]))
-        keep = cand[order[:top]]
-    return keep
+def _topk_frame(scores: np.ndarray, ids: np.ndarray, qids, top: int) -> pd.DataFrame:
+    """``(query_id, id, score)`` rows: for each column ``j`` of the
+    (rows x queries) ``scores``, the best ``top`` rows for query ``qids[j]``
+    under (score desc, id asc) — the one emission step of every scan
+    kernel."""
+    top = min(top, scores.shape[0])
+    flat = topk_rows_det(scores, ids, top).T.ravel()
+    return pd.DataFrame(
+        {
+            "query_id": np.repeat(np.asarray(qids, dtype=object), top),
+            "id": ids[flat],
+            "score": scores[flat, np.repeat(np.arange(len(qids)), top)],
+        }
+    )
+
+
+def _best_per_query(frame: pd.DataFrame, k: int) -> pd.DataFrame:
+    """The best ``k`` rows per query of ``(query_id, id, score)`` rows under
+    (score desc, id asc), sorted by query then rank."""
+    out = frame.sort_values(
+        ["query_id", "score", "id"], ascending=[True, False, True], kind="mergesort"
+    )
+    return out.groupby("query_id", sort=False).head(k).reset_index(drop=True)
+
+
+def merge_topk_partials(partials: pd.DataFrame, k: int) -> pd.DataFrame:
+    """Driver-side final top-K merge of per-partition partials: (score desc,
+    id asc) per query — the same tie-break as ``topk_per_group``."""
+    if len(partials) == 0:
+        return partials.assign(rank=pd.Series(dtype="int64"))
+    out = _best_per_query(partials, k)
+    out["rank"] = out.groupby("query_id", sort=False).cumcount() + 1
+    return out
+
+
+def _segment_matrix(row, scoring: str) -> np.ndarray:
+    """One segment row as a float64 (n x dim) matrix: its float32 ``vecs``
+    (``scoring='float'``), its SQ8 codes dequantized with each vector's
+    min/max (``'dequant'``), or the raw SQ8 byte codes (``'byte'``)."""
+    if scoring == "float":
+        return np.frombuffer(row.vecs, dtype=np.float32).reshape(row.n, row.dim).astype(
+            np.float64
+        )
+    codes = np.frombuffer(row.codes, dtype=np.uint8).reshape(row.n, row.dim).astype(np.float64)
+    if scoring == "byte":
+        return codes
+    mins = np.frombuffer(row.mins, dtype=np.float32).astype(np.float64)
+    maxs = np.frombuffer(row.maxs, dtype=np.float32).astype(np.float64)
+    return codes * ((maxs - mins) / 255.0)[:, None] + mins[:, None]
+
+
+def _scoring_queries(qmat: np.ndarray, metric: str, scoring: str) -> tuple[np.ndarray, str]:
+    """The query matrix and metric a scan scores :func:`_segment_matrix`
+    with. Byte scoring is the reference's integer kernel (K5/K6,
+    VectorMath.cs:435-681 via BruteForceVectorIndex.cs:296-333): each query
+    is quantized by its own range and ranked by L2² (l2) or the dot product
+    (ip and cosine) on the codes — exact in float64, as every value is an
+    integer below 2^53."""
+    if scoring != "byte" or not len(qmat):
+        return qmat, metric
+    return quantize_queries_np(qmat).astype(np.float64), "l2" if metric == "l2" else "ip"
+
+
+def _pack(
+    src: DataFrame, width_col: str, blob_col: str, dtype, rows_per_segment: int, schema: str
+) -> DataFrame:
+    """Pack ``(id, row, cluster_id)`` rows into segment rows: accumulate per
+    cluster within each task and emit fixed-size segments of ``n`` rows of
+    ``width_col`` elements, row-major in ``blob_col``."""
+
+    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        acc: dict[int, tuple[list, list]] = {}
+        seg_no: dict[int, int] = {}
+
+        def emit(c: int, ids: list, rows: list) -> pd.DataFrame:
+            mat = np.vstack(rows).astype(dtype)
+            no = seg_no.get(c, 0)
+            seg_no[c] = no + 1
+            return pd.DataFrame(
+                {
+                    "cluster_id": [c],
+                    "segment_no": [no],
+                    "n": [mat.shape[0]],
+                    width_col: [mat.shape[1]],
+                    "ids": [list(ids)],
+                    blob_col: [mat.tobytes()],
+                }
+            )
+
+        for pdf in batches:
+            for c, grp in pdf.groupby("cluster_id"):
+                ids, rows = acc.setdefault(int(c), ([], []))
+                ids.extend(grp["id"].tolist())
+                rows.extend(grp["row"].tolist())
+                while len(ids) >= rows_per_segment:
+                    yield emit(int(c), ids[:rows_per_segment], rows[:rows_per_segment])
+                    del ids[:rows_per_segment], rows[:rows_per_segment]
+        for c, (ids, rows) in acc.items():
+            if ids:
+                yield emit(c, ids, rows)
+
+    return src.mapInPandas(pack, schema)
 
 
 def pack_segments(
@@ -93,49 +206,34 @@ def pack_segments(
     ``dtype`` sets the packed element width — float32 for corpus segments
     (bandwidth), float64 where full input precision must survive packing
     (the query side of the block join)."""
-    cols = [F.col(id_col).cast("string").alias("id"), F.col(vector_col).alias("vector")]
+    cols = [F.col(id_col).cast("string").alias("id"), F.col(vector_col).alias("row")]
     if cluster_col is not None:
         cols.append(F.col(cluster_col).cast("int").alias("cluster_id"))
         src = df.select(*cols).repartition("cluster_id")
     else:
         cols.append(F.lit(-1).alias("cluster_id"))
         src = df.select(*cols)
+    np_dtype = np.float64 if dtype == "float64" else np.float32
+    return _pack(src, "dim", "vecs", np_dtype, rows_per_segment, SEGMENT_SCHEMA)
 
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # accumulate per cluster within the task, emit fixed-size segments
-        acc: dict[int, tuple[list, list]] = {}
-        seg_no: dict[int, int] = {}
 
-        np_dtype = np.float64 if dtype == "float64" else np.float32
-
-        def emit(c: int, ids: list, vecs: list) -> pd.DataFrame:
-            mat = np.vstack(vecs).astype(np_dtype)
-            no = seg_no.get(c, 0)
-            seg_no[c] = no + 1
-            return pd.DataFrame(
-                {
-                    "cluster_id": [c],
-                    "segment_no": [no],
-                    "n": [mat.shape[0]],
-                    "dim": [mat.shape[1]],
-                    "ids": [list(ids)],
-                    "vecs": [mat.tobytes()],
-                }
-            )
-
-        for pdf in batches:
-            for c, grp in pdf.groupby("cluster_id"):
-                ids, vecs = acc.setdefault(int(c), ([], []))
-                ids.extend(grp["id"].tolist())
-                vecs.extend(grp["vector"].tolist())
-                while len(ids) >= rows_per_segment:
-                    yield emit(int(c), ids[:rows_per_segment], vecs[:rows_per_segment])
-                    del ids[:rows_per_segment], vecs[:rows_per_segment]
-        for c, (ids, vecs) in acc.items():
-            if ids:
-                yield emit(c, ids, vecs)
-
-    return src.mapInPandas(pack, SEGMENT_SCHEMA)
+def pack_pq_segments(
+    encoded: DataFrame,
+    *,
+    id_col: str = "id",
+    codes_col: str = "pq_codes",
+    cluster_col: str = "cluster_id",
+    rows_per_segment: int = DEFAULT_ROWS_PER_SEGMENT,
+) -> DataFrame:
+    """Pack PQ codes into contiguous uint8 blocks per cluster — the fully
+    compressed scan unit: M bytes/vector (64x smaller than dim-128 float32),
+    so a 10^11-row ADC scan reads ~800 GB instead of 50 TB."""
+    src = encoded.select(
+        F.col(id_col).cast("string").alias("id"),
+        F.col(codes_col).alias("row"),
+        F.col(cluster_col).cast("int").alias("cluster_id"),
+    ).repartition("cluster_id")
+    return _pack(src, "m", "codes", np.uint8, rows_per_segment, PQ_SEGMENT_SCHEMA)
 
 
 def write_segments(segments: DataFrame, path: str) -> None:
@@ -211,182 +309,148 @@ def pack_segments_sq8(
     return float_segs.mapInPandas(quantize, SQ8_SEGMENT_SCHEMA)
 
 
-def quantize_query_np(q: np.ndarray) -> np.ndarray:
+def quantize_queries_np(qmat: np.ndarray) -> np.ndarray:
     """Reference query-side SQ8 (ScalarQuantizer.Quantize, used by the byte
-    kernels at BruteForceVectorIndex.cs:304): the query is scaled by its OWN
-    min/max to 0..255, round-half-even (C# Math.Round), clamped."""
-    q = np.asarray(q, dtype=np.float64)
-    lo, hi = q.min(), q.max()
+    kernels at BruteForceVectorIndex.cs:304) over a (Q x dim) matrix: each
+    query is scaled by its OWN min/max to 0..255, round-half-even (C#
+    Math.Round), clamped; a constant query quantizes to zeros."""
+    qmat = np.asarray(qmat, dtype=np.float64)
+    lo = qmat.min(axis=1)
+    hi = qmat.max(axis=1)
     rng = hi - lo
-    if rng == 0:
-        return np.zeros(q.shape, dtype=np.uint8)
-    return np.clip(np.round((q - lo) * (255.0 / rng)), 0, 255).astype(np.uint8)
+    safe = np.where(rng == 0, 1.0, rng)
+    codes = np.clip(np.round((qmat - lo[:, None]) * (255.0 / safe[:, None])), 0, 255)
+    codes[rng == 0, :] = 0
+    return codes.astype(np.uint8)
 
 
-def segment_knn_sq8(
+def _scan_partials(
+    segments: DataFrame,
+    queries_np: list[tuple[str, np.ndarray]],
+    k: int,
+    metric: str,
+    probes: dict[int, list[int]] | None,
+    exclude_ids: frozenset | set | None,
+    scoring: str,
+) -> DataFrame:
+    """The small-batch scan behind :func:`segment_knn_partials` and
+    :func:`segment_knn`: at most ``k`` rows per probing query per
+    partition."""
+    spark = segments.sparkSession
+    qids = [q for q, _ in queries_np]
+    qmat, metric = _scoring_queries(
+        np.asarray([v for _, v in queries_np], dtype=np.float64), metric, scoring
+    )
+    excl = frozenset(exclude_ids) if exclude_ids else None
+    bq = spark.sparkContext.broadcast((qids, qmat, probes, excl))
+    kk = max(k, 1)
+
+    if probes is not None:
+        segments = segments.filter(F.col("cluster_id").isin(sorted(probes)))
+
+    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        qids_b, qmat_b, probes_b, excl_b = bq.value
+        every = list(range(len(qids_b)))
+        # per-segment top-K frames, cut back to a running top-K per query
+        # whenever they outgrow a few queries x k rows
+        parts: list[pd.DataFrame] = []
+        buffered = 0
+        cap = max(4 * kk * len(qids_b), 65536)
+        for pdf in batches:
+            for row in pdf.itertuples(index=False):
+                sub = every if probes_b is None else probes_b.get(int(row.cluster_id))
+                if not sub:
+                    continue
+                vmat = _segment_matrix(row, scoring)
+                ids = np.asarray(row.ids, dtype=object)
+                if excl_b is not None:
+                    keep = np.fromiter(
+                        (i not in excl_b for i in ids), dtype=bool, count=len(ids)
+                    )
+                    if not keep.all():
+                        vmat = vmat[keep]
+                        ids = ids[keep]
+                    if ids.size == 0:
+                        continue
+                scores = score_matrix(vmat, qmat_b[sub], metric)
+                parts.append(_topk_frame(scores, ids, [qids_b[i] for i in sub], kk))
+                buffered += len(parts[-1])
+                if buffered > cap:
+                    parts = [_best_per_query(pd.concat(parts, ignore_index=True), kk)]
+                    buffered = len(parts[0])
+        if parts:
+            yield _best_per_query(pd.concat(parts, ignore_index=True), kk)
+
+    return segments.mapInPandas(scan, RESULT_SCHEMA)
+
+
+def segment_knn_partials(
     segments: DataFrame,
     queries_np: list[tuple[str, np.ndarray]],
     k: int,
     metric: str,
     probes: dict[int, list[int]] | None = None,
-    scoring: str = "dequant",
+    exclude_ids: frozenset | set | None = None,
 ) -> DataFrame:
-    """Top-K over SQ8 segments.
+    """ONE-STAGE partial top-K over float32 segments: each scan task keeps a
+    running top-K per probing query across all its segment rows and emits at
+    most (#probing queries x k) rows per partition — no shuffle at all. The
+    driver merges the partials (:func:`merge_topk_partials`), so a complete
+    small-batch search is a single narrow Spark job: the local-mode analog
+    of the reference's single-pass in-RAM scan
+    (``BruteForceVectorIndex.cs:118-160``), and at cluster scale the merge
+    input stays tiny (partitions x queries x k rows). ``probes`` maps
+    cluster_id -> indices of the queries probing it (None = every query
+    scans every segment).
 
-    ``scoring='dequant'`` (default): dequantize per segment (vectorized)
-    then the float GEMM scorer — approximate by quantization error only.
-    ``scoring='byte'``: the reference's byte-domain kernels (K5/K6,
-    VectorMath.cs:435-681 via BruteForceVectorIndex.cs:296-333): the query
-    is quantized by its own range and ranked by pure integer L2²/dot on the
-    uint8 codes — no dequantization, no rescale (coarser approximation,
-    exactly the reference's tradeoff). Integer products are computed exactly
-    through float64 GEMM (values < 2^53)."""
-    spark = segments.sparkSession
-    qids = [q for q, _ in queries_np]
-    qmat = np.asarray([v for _, v in queries_np], dtype=np.float64)
-    qcodes = (
-        np.vstack([quantize_query_np(v) for _, v in queries_np]).astype(np.float64)
-        if scoring == "byte"
-        else None
-    )
-    bq = spark.sparkContext.broadcast((qids, qmat, probes, qcodes))
-    kk = max(k, 1)
-    if probes is not None:
-        segments = segments.filter(F.col("cluster_id").isin(sorted(probes)))
+    ``exclude_ids`` (small, broadcast) drops those ids INSIDE the kernel
+    before scoring, by a set lookup per id — the delta index's head-shadow
+    set. Masking before the cut keeps k tail candidates per query exact
+    with no over-fetch."""
+    return _scan_partials(segments, queries_np, k, metric, probes, exclude_ids, "float")
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_b, qmat_b, probes_b, qcodes_b = bq.value
-        nq_all = len(qids_b)
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                sub = (
-                    list(range(nq_all))
-                    if probes_b is None
-                    else probes_b.get(int(row.cluster_id))
-                )
-                if not sub:
-                    continue
-                if qcodes_b is not None:
-                    vc = np.frombuffer(row.codes, dtype=np.uint8).reshape(
-                        row.n, row.dim
-                    ).astype(np.float64)
-                    qc = qcodes_b[sub]  # S x dim
-                    if metric == "l2":
-                        v2 = np.einsum("ij,ij->i", vc, vc)[:, None]
-                        q2 = np.einsum("ij,ij->i", qc, qc)[None, :]
-                        scores = -(v2 - 2.0 * (vc @ qc.T) + q2)
-                    else:  # ip and cosine both use the byte dot (reference)
-                        scores = vc @ qc.T
-                    ids = np.asarray(row.ids, dtype=object)
-                    top = min(kk, scores.shape[0])
-                    idx = topk_rows_det(scores, ids, top)
-                    flat = idx.T.ravel()
-                    yield pd.DataFrame(
-                        {
-                            "query_id": np.repeat(
-                                np.asarray([qids_b[i] for i in sub], dtype=object), top
-                            ),
-                            "id": ids[flat],
-                            "score": scores[flat, np.repeat(np.arange(len(sub)), top)],
-                        }
-                    )
-                    continue
-                codes = np.frombuffer(row.codes, dtype=np.uint8).reshape(row.n, row.dim)
-                mins = np.frombuffer(row.mins, dtype=np.float32).astype(np.float64)
-                maxs = np.frombuffer(row.maxs, dtype=np.float32).astype(np.float64)
-                scale = (maxs - mins) / 255.0
-                vmat = codes.astype(np.float64) * scale[:, None] + mins[:, None]
-                ids = np.asarray(row.ids, dtype=object)
-                Q = qmat_b[sub]
-                if metric == "ip":
-                    scores = vmat @ Q.T
-                elif metric == "l2":
-                    v2 = np.einsum("ij,ij->i", vmat, vmat)[:, None]
-                    q2 = np.einsum("ij,ij->i", Q, Q)[None, :]
-                    scores = -(v2 - 2.0 * (vmat @ Q.T) + q2)
-                else:
-                    vn = np.linalg.norm(vmat, axis=1)
-                    qn = np.linalg.norm(Q, axis=1)
-                    scores = (vmat / np.where(vn < 1e-6, 1, vn)[:, None]) @ (
-                        Q / np.where(qn < 1e-6, 1, qn)[:, None]
-                    ).T
-                    scores[vn < 1e-6, :] = 0.0
-                    # zero-norm QUERY guard too, matching knn._score_gemm /
-                    # cosine_sim (ref VectorMath zero-norm -> 0.0)
-                    scores[:, qn < 1e-6] = 0.0
-                top = min(kk, scores.shape[0])
-                idx = topk_rows_det(scores, ids, top)
-                flat = idx.T.ravel()
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(
-                            np.asarray([qids_b[i] for i in sub], dtype=object), top
-                        ),
-                        "id": ids[flat],
-                        "score": scores[flat, np.repeat(np.arange(len(sub)), top)],
-                    }
-                )
 
-    scored = segments.mapInPandas(scan, RESULT_SCHEMA)
+def segment_knn(
+    segments: DataFrame,
+    queries_np: list[tuple[str, np.ndarray]],
+    k: int,
+    metric: str,
+    probes: dict[int, list[int]] | None = None,
+    scoring: str = "float",
+) -> DataFrame:
+    """Top-K over segment rows as a Spark DataFrame: the per-partition
+    partials of :func:`segment_knn_partials`, merged by ``topk_per_group``.
+
+    ``scoring='float'`` (default) scans float32 segments. ``'dequant'`` and
+    ``'byte'`` scan SQ8 segments (:func:`pack_segments_sq8`): dequantize per
+    segment then the float GEMM scorer (approximate by quantization error
+    only), or the reference's byte-domain kernels on the raw codes (coarser,
+    exactly the reference's tradeoff; see :func:`_scoring_queries`)."""
+    scored = _scan_partials(segments, queries_np, k, metric, probes, None, scoring)
     return topk_per_group(
         scored, ["query_id"], k, score_col="score", tiebreak_col="id", two_phase=False
     )
 
 
-PQ_SEGMENT_SCHEMA = (
-    "cluster_id int, segment_no int, n int, m int, ids array<string>, codes binary"
-)
+def _collect_queries(
+    queries: DataFrame, query_id_col: str, query_vector_col: str
+) -> list[tuple[str, np.ndarray]]:
+    return [
+        (r[query_id_col], np.asarray(r[query_vector_col]))
+        for r in queries.select(query_id_col, query_vector_col).collect()
+    ]
 
 
-def pack_pq_segments(
-    encoded: DataFrame,
-    *,
-    id_col: str = "id",
-    codes_col: str = "pq_codes",
-    cluster_col: str = "cluster_id",
-    rows_per_segment: int = DEFAULT_ROWS_PER_SEGMENT,
-) -> DataFrame:
-    """Pack PQ codes into contiguous uint8 blocks per cluster — the fully
-    compressed scan unit: M bytes/vector (64x smaller than dim-128 float32),
-    so a 10^11-row ADC scan reads ~800 GB instead of 50 TB."""
-    src = encoded.select(
-        F.col(id_col).cast("string").alias("id"),
-        F.col(codes_col).alias("codes"),
-        F.col(cluster_col).cast("int").alias("cluster_id"),
-    ).repartition("cluster_id")
+def _probe_map(model, queries_np: list[tuple[str, np.ndarray]], nprobe: int) -> dict[int, list[int]]:
+    """cluster_id -> indices of the queries probing it, from the driver-side
+    :func:`~pyrope_spark.operators.ivf.select_probes` over the centroids."""
+    from pyrope_spark.operators.ivf import select_probes
 
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[int, tuple[list, list]] = {}
-        seg_no: dict[int, int] = {}
-
-        def emit(c: int, ids: list, codes: list) -> pd.DataFrame:
-            mat = np.vstack(codes).astype(np.uint8)
-            no = seg_no.get(c, 0)
-            seg_no[c] = no + 1
-            return pd.DataFrame(
-                {
-                    "cluster_id": [c],
-                    "segment_no": [no],
-                    "n": [mat.shape[0]],
-                    "m": [mat.shape[1]],
-                    "ids": [list(ids)],
-                    "codes": [mat.tobytes()],
-                }
-            )
-
-        for pdf in batches:
-            for c, grp in pdf.groupby("cluster_id"):
-                ids, codes = acc.setdefault(int(c), ([], []))
-                ids.extend(grp["id"].tolist())
-                codes.extend(grp["codes"].tolist())
-                while len(ids) >= rows_per_segment:
-                    yield emit(int(c), ids[:rows_per_segment], codes[:rows_per_segment])
-                    del ids[:rows_per_segment], codes[:rows_per_segment]
-        for c, (ids, codes) in acc.items():
-            if ids:
-                yield emit(c, ids, codes)
-
-    return src.mapInPandas(pack, PQ_SEGMENT_SCHEMA)
+    qidx = {q: i for i, (q, _) in enumerate(queries_np)}
+    probes: dict[int, list[int]] = {}
+    for qid, c in select_probes(model, queries_np, nprobe):
+        probes.setdefault(int(c), []).append(qidx[qid])
+    return probes
 
 
 def ivf_pq_search_packed(
@@ -403,128 +467,32 @@ def ivf_pq_search_packed(
     residual distance tables broadcast, fancy-indexed against the uint8 code
     block of each probed segment (reference: IvfPqVectorIndex.cs:118-212 on
     the packed layout)."""
-    from pyrope_spark.operators.ivf import select_probes
+    from pyrope_spark.operators.pq import _adc_frame, _residual_adc_tables
 
     spark = segments.sparkSession
-    qrows = [
-        (r[query_id_col], list(r[query_vector_col]))
-        for r in queries.select(query_id_col, query_vector_col).collect()
-    ]
-    probe_pairs = select_probes(model.ivf, qrows, nprobe)
-    qvec = {q: np.asarray(v, dtype=np.float64) for q, v in qrows}
-    m, dsub, kk = model.pq.m, model.pq.dsub, model.pq.k
-    keys, tabs = [], []
-    for qid, c in probe_pairs:
-        rq = qvec[qid] - model.ivf.centroids[c]
-        t = np.empty((m, kk), dtype=np.float64)
-        for sub in range(m):
-            qs = rq[sub * dsub : (sub + 1) * dsub]
-            cb = model.pq.codebooks[sub]
-            t[sub] = qs @ qs - 2.0 * (cb @ qs) + np.einsum("ij,ij->i", cb, cb)
-        keys.append((qid, int(c)))
-        tabs.append(t)
-    bt = spark.sparkContext.broadcast(
-        (keys, np.stack(tabs) if tabs else np.zeros((0, m, kk)))
+    keys, tabs, by_cluster = _residual_adc_tables(
+        model, queries, nprobe, query_id_col, query_vector_col
     )
-    probed = sorted({c for _, c in probe_pairs})
-    segs = segments.filter(F.col("cluster_id").isin(probed))
+    bt = spark.sparkContext.broadcast((keys, tabs, by_cluster))
+    segs = segments.filter(F.col("cluster_id").isin(sorted(by_cluster)))
     topn = max(k, 1)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keys_b, tabs_b = bt.value
-        by_cluster: dict[int, list[int]] = {}
-        for i, (_, c) in enumerate(keys_b):
-            by_cluster.setdefault(c, []).append(i)
+        keys_b, tabs_b, by_cluster_b = bt.value
         for pdf in batches:
             for row in pdf.itertuples(index=False):
-                idxs = by_cluster.get(int(row.cluster_id))
+                idxs = by_cluster_b.get(int(row.cluster_id))
                 if not idxs:
                     continue
                 codes = np.frombuffer(row.codes, dtype=np.uint8).reshape(row.n, row.m).astype(np.int64)
-                ids = np.asarray(row.ids, dtype=object)
-                out_q, out_i, out_s = [], [], []
-                sub_idx = np.arange(row.m)[None, :]
-                for ti in idxs:
-                    qid = keys_b[ti][0]
-                    dist = tabs_b[ti][sub_idx, codes].sum(axis=1)
-                    scores = -dist
-                    top = min(topn, len(scores))
-                    sel = topk_flat_det(scores, ids, top)
-                    out_q.extend([qid] * len(sel))
-                    out_i.extend(ids[sel])
-                    out_s.extend(scores[sel])
-                if out_q:
-                    yield pd.DataFrame({"query_id": out_q, "id": out_i, "score": out_s})
+                yield _adc_frame(
+                    tabs_b, keys_b, idxs, codes, np.asarray(row.ids, dtype=object), topn
+                )
 
     scored = segs.mapInPandas(scan, RESULT_SCHEMA)
     return topk_per_group(
         scored, ["query_id"], k, score_col="score", tiebreak_col="id", two_phase=False
     )
-
-
-def segment_knn(
-    segments: DataFrame,
-    queries_np: list[tuple[str, np.ndarray]],
-    k: int,
-    metric: str,
-    probes: dict[int, list[int]] | None = None,
-) -> DataFrame:
-    """Top-K scan over segment rows. ``probes`` maps cluster_id -> indices of
-    the queries probing it (None = every query scans every segment)."""
-    spark = segments.sparkSession
-    qids = [q for q, _ in queries_np]
-    qmat = np.asarray([v for _, v in queries_np], dtype=np.float64)
-    bq = spark.sparkContext.broadcast((qids, qmat, probes))
-    kk = max(k, 1)
-
-    if probes is not None:
-        segments = segments.filter(F.col("cluster_id").isin(sorted(probes)))
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_b, qmat_b, probes_b = bq.value
-        nq_all = len(qids_b)
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                sub = (
-                    list(range(nq_all))
-                    if probes_b is None
-                    else probes_b.get(int(row.cluster_id))
-                )
-                if not sub:
-                    continue
-                mat = np.frombuffer(row.vecs, dtype=np.float32).reshape(row.n, row.dim)
-                ids = np.asarray(row.ids, dtype=object)
-                scores = score_matrix(mat.astype(np.float64), qmat_b[sub], metric)
-                top = min(kk, scores.shape[0])
-                idx = topk_rows_det(scores, ids, top)
-                flat = idx.T.ravel()
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(
-                            np.asarray([qids_b[i] for i in sub], dtype=object), top
-                        ),
-                        "id": ids[flat],
-                        "score": scores[flat, np.repeat(np.arange(len(sub)), top)],
-                    }
-                )
-
-    scored = segments.mapInPandas(scan, RESULT_SCHEMA)
-    return topk_per_group(
-        scored, ["query_id"], k, score_col="score", tiebreak_col="id", two_phase=False
-    )
-
-
-def quantize_queries_np(qmat: np.ndarray) -> np.ndarray:
-    """Vectorized :func:`quantize_query_np` over a (Q x dim) matrix — same
-    op order per row, so codes are bit-identical to the per-query path."""
-    qmat = np.asarray(qmat, dtype=np.float64)
-    lo = qmat.min(axis=1)
-    hi = qmat.max(axis=1)
-    rng = hi - lo
-    safe = np.where(rng == 0, 1.0, rng)
-    codes = np.clip(np.round((qmat - lo[:, None]) * (255.0 / safe[:, None])), 0, 255)
-    codes[rng == 0, :] = 0
-    return codes.astype(np.uint8)
 
 
 def pack_query_segments(
@@ -567,15 +535,11 @@ def segment_knn_distributed(
     rows_per_chunk: int = 4096,
 ) -> DataFrame:
     """Fully distributed exact/SQ8 top-K for LARGE query batches: the query
-    table is packed into float32 chunks and block-joined against the segment
+    table is packed into float64 chunks and block-joined against the segment
     table — the classic block-matrix GEMM decomposition. Queries never touch
     the driver (contrast :func:`segment_knn`, which broadcasts a collected
-    list — the low-latency small-batch path).
-
-    ``scoring='float'`` scans float32 segments; ``'dequant'`` / ``'byte'``
-    scan SQ8 segments (:func:`pack_segments_sq8`), byte being the
-    reference's integer-domain kernel (query quantized by its own range,
-    VectorMath.cs:435-681).
+    list — the low-latency small-batch path). ``scoring`` is as in
+    :func:`segment_knn`.
 
     Scale shape: the join materializes |segments| x |chunks| pairs; Spark
     broadcasts the smaller side (usually the chunk table), so the
@@ -591,162 +555,15 @@ def segment_knn_distributed(
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for row in pdf.itertuples(index=False):
-                qmat = np.frombuffer(row.qvecs, dtype=np.float64).reshape(
-                    row.qn, row.qdim
-                )
-                qids = np.asarray(row.qids, dtype=object)
-                ids = np.asarray(row.ids, dtype=object)
-                if scoring == "byte":
-                    vc = np.frombuffer(row.codes, dtype=np.uint8).reshape(
-                        row.n, row.dim
-                    ).astype(np.float64)
-                    qc = quantize_queries_np(qmat).astype(np.float64)
-                    if metric == "l2":
-                        v2 = np.einsum("ij,ij->i", vc, vc)[:, None]
-                        q2 = np.einsum("ij,ij->i", qc, qc)[None, :]
-                        scores = -(v2 - 2.0 * (vc @ qc.T) + q2)
-                    else:  # ip and cosine both use the byte dot (reference)
-                        scores = vc @ qc.T
-                else:
-                    if scoring == "dequant":
-                        codes = np.frombuffer(row.codes, dtype=np.uint8).reshape(
-                            row.n, row.dim
-                        )
-                        mins = np.frombuffer(row.mins, dtype=np.float32).astype(np.float64)
-                        maxs = np.frombuffer(row.maxs, dtype=np.float32).astype(np.float64)
-                        scale = (maxs - mins) / 255.0
-                        vmat = codes.astype(np.float64) * scale[:, None] + mins[:, None]
-                    else:
-                        vmat = np.frombuffer(row.vecs, dtype=np.float32).reshape(
-                            row.n, row.dim
-                        ).astype(np.float64)
-                    if metric == "ip":
-                        scores = vmat @ qmat.T
-                    elif metric == "l2":
-                        v2 = np.einsum("ij,ij->i", vmat, vmat)[:, None]
-                        q2 = np.einsum("ij,ij->i", qmat, qmat)[None, :]
-                        scores = -(v2 - 2.0 * (vmat @ qmat.T) + q2)
-                    else:
-                        vn = np.linalg.norm(vmat, axis=1)
-                        qn = np.linalg.norm(qmat, axis=1)
-                        scores = (vmat / np.where(vn < 1e-6, 1, vn)[:, None]) @ (
-                            qmat / np.where(qn < 1e-6, 1, qn)[:, None]
-                        ).T
-                        scores[vn < 1e-6, :] = 0.0
-                        scores[:, qn < 1e-6] = 0.0
-                top = min(kk, scores.shape[0])
-                idx = topk_rows_det(scores, ids, top)
-                flat = idx.T.ravel()
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids, top),
-                        "id": ids[flat],
-                        "score": scores[flat, np.repeat(np.arange(len(qids)), top)],
-                    }
-                )
+                qmat = np.frombuffer(row.qvecs, dtype=np.float64).reshape(row.qn, row.qdim)
+                qmat, m = _scoring_queries(qmat, metric, scoring)
+                scores = score_matrix(_segment_matrix(row, scoring), qmat, m)
+                yield _topk_frame(scores, np.asarray(row.ids, dtype=object), row.qids, kk)
 
     scored = joined.mapInPandas(scan, RESULT_SCHEMA)
     return topk_per_group(
         scored, ["query_id"], k, score_col="score", tiebreak_col="id", two_phase=False
     )
-
-
-def segment_knn_partials(
-    segments: DataFrame,
-    queries_np: list[tuple[str, np.ndarray]],
-    k: int,
-    metric: str,
-    probes: dict[int, list[int]] | None = None,
-    exclude_ids: frozenset | set | None = None,
-) -> DataFrame:
-    """ONE-STAGE partial top-K over segments: each scan task keeps a running
-    top-K per probing query across all its segment rows and emits at most
-    (#probing queries x k) rows per partition — no shuffle at all. The
-    driver merges the partials (:func:`merge_topk_partials`), so a complete
-    small-batch search is a single narrow Spark job: the local-mode analog
-    of the reference's single-pass in-RAM scan
-    (``BruteForceVectorIndex.cs:118-160``), and at cluster scale the merge
-    input stays tiny (partitions x queries x k rows).
-
-    ``exclude_ids`` (small, broadcast) drops those ids INSIDE the kernel
-    before scoring, by a set lookup per id — the delta index's head-shadow
-    set. Masking before the cut keeps k tail candidates per query exact
-    with no over-fetch."""
-    spark = segments.sparkSession
-    qids = [q for q, _ in queries_np]
-    qmat = np.asarray([v for _, v in queries_np], dtype=np.float64)
-    excl = frozenset(exclude_ids) if exclude_ids else None
-    bq = spark.sparkContext.broadcast((qids, qmat, probes, excl))
-    kk = max(k, 1)
-
-    if probes is not None:
-        segments = segments.filter(F.col("cluster_id").isin(sorted(probes)))
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_b, qmat_b, probes_b, excl_b = bq.value
-        nq_all = len(qids_b)
-        # running per-query top-K across every segment row in this partition
-        best_s: dict[int, np.ndarray] = {}
-        best_i: dict[int, np.ndarray] = {}
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                sub = (
-                    list(range(nq_all))
-                    if probes_b is None
-                    else probes_b.get(int(row.cluster_id))
-                )
-                if not sub:
-                    continue
-                vmat = np.frombuffer(row.vecs, dtype=np.float32).reshape(row.n, row.dim)
-                ids = np.asarray(row.ids, dtype=object)
-                if excl_b is not None:
-                    keep = np.fromiter(
-                        (i not in excl_b for i in ids), dtype=bool, count=len(ids)
-                    )
-                    if not keep.all():
-                        vmat = vmat[keep]
-                        ids = ids[keep]
-                    if ids.size == 0:
-                        continue
-                scores = score_matrix(vmat.astype(np.float64), qmat_b[sub], metric)
-                top = min(kk, scores.shape[0])
-                idx = topk_rows_det(scores, ids, top)
-                for j, qi in enumerate(sub):
-                    s = scores[idx[:, j], j]
-                    i = ids[idx[:, j]]
-                    if qi in best_s:
-                        s = np.concatenate([best_s[qi], s])
-                        i = np.concatenate([best_i[qi], i])
-                        if len(s) > kk:
-                            keep_top = topk_flat_det(s, i, kk)
-                            s, i = s[keep_top], i[keep_top]
-                    best_s[qi] = s
-                    best_i[qi] = i
-        if best_s:
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(
-                        [np.full(len(best_s[qi]), qids_b[qi], dtype=object) for qi in best_s]
-                    ),
-                    "id": np.concatenate([best_i[qi] for qi in best_s]),
-                    "score": np.concatenate([best_s[qi] for qi in best_s]),
-                }
-            )
-
-    return segments.mapInPandas(scan, RESULT_SCHEMA)
-
-
-def merge_topk_partials(partials: pd.DataFrame, k: int) -> pd.DataFrame:
-    """Driver-side final top-K merge of per-partition partials: (score desc,
-    id asc) per query — the same tie-break as ``topk_per_group``."""
-    if len(partials) == 0:
-        return partials.assign(rank=pd.Series(dtype="int64"))
-    out = partials.sort_values(
-        ["query_id", "score", "id"], ascending=[True, False, True], kind="mergesort"
-    )
-    out = out.groupby("query_id", sort=False).head(k).reset_index(drop=True)
-    out["rank"] = out.groupby("query_id", sort=False).cumcount() + 1
-    return out
 
 
 def ivf_search_packed_single_job(
@@ -767,16 +584,9 @@ def ivf_search_packed_single_job(
     top-Ks (no shuffle) and the driver merges them. Returns a pandas
     DataFrame (query_id, id, score) — callers needing a Spark DataFrame use
     :func:`ivf_search_packed` (same results, shuffle merge)."""
-    from pyrope_spark.operators.ivf import select_probes
-
-    qrows = [(q, list(map(float, v))) for q, v in queries_np]
-    pairs = select_probes(model, qrows, nprobe)
-    qidx = {q: i for i, (q, _) in enumerate(qrows)}
-    probes: dict[int, list[int]] = {}
-    for qid, c in pairs:
-        probes.setdefault(int(c), []).append(qidx[qid])
     partials = segment_knn_partials(
-        segments, queries_np, k, model.metric, probes=probes, exclude_ids=exclude_ids
+        segments, queries_np, k, model.metric,
+        probes=_probe_map(model, queries_np, nprobe), exclude_ids=exclude_ids,
     )
     pdf = pd.DataFrame(
         [(r["query_id"], r["id"], r["score"]) for r in partials.collect()],
@@ -789,11 +599,8 @@ def knn_bruteforce_packed(
     segments: DataFrame, queries: DataFrame, k: int, metric: str,
     *, query_id_col: str = "query_id", query_vector_col: str = "vector",
 ) -> DataFrame:
-    qrows = [
-        (r[query_id_col], np.asarray(r[query_vector_col]))
-        for r in queries.select(query_id_col, query_vector_col).collect()
-    ]
-    return segment_knn(segments, qrows, k, metric, probes=None)
+    qnp = _collect_queries(queries, query_id_col, query_vector_col)
+    return segment_knn(segments, qnp, k, metric, probes=None)
 
 
 def ivf_search_packed(
@@ -802,19 +609,8 @@ def ivf_search_packed(
 ) -> DataFrame:
     """IVF probe over packed segments: probe selection driver-side, segment
     pruning by cluster, GEMM per probed segment."""
-    from pyrope_spark.operators.ivf import select_probes
-
-    qrows = [
-        (r[query_id_col], list(r[query_vector_col]))
-        for r in queries.select(query_id_col, query_vector_col).collect()
-    ]
-    pairs = select_probes(model, qrows, nprobe)
-    qidx = {q: i for i, (q, _) in enumerate(qrows)}
-    probes: dict[int, list[int]] = {}
-    for qid, c in pairs:
-        probes.setdefault(int(c), []).append(qidx[qid])
-    qnp = [(q, np.asarray(v)) for q, v in qrows]
-    return segment_knn(segments, qnp, k, model.metric, probes=probes)
+    qnp = _collect_queries(queries, query_id_col, query_vector_col)
+    return segment_knn(segments, qnp, k, model.metric, probes=_probe_map(model, qnp, nprobe))
 
 
 def ivf_pq_search_distributed(
@@ -894,18 +690,7 @@ def ivf_pq_search_distributed(
             dist = np.zeros((len(qids), row.n), dtype=np.float64)
             for sub in range(m):
                 dist += tabs[sub][:, codes[:, sub]]
-            scores = -dist
-            top = min(kk, scores.shape[1])
-            idx = topk_rows_det(scores.T, ids, top).T
-            out.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids, top),
-                        "id": ids[idx.ravel()],
-                        "score": np.take_along_axis(scores, idx, axis=1).ravel(),
-                    }
-                )
-            )
+            out.append(_topk_frame(-dist.T, ids, qids, kk))
         return pd.concat(out, ignore_index=True)
 
     scored = (

@@ -274,8 +274,9 @@ def ann_topk(
         )
     if index.method == "sq8":
         from pyrope_spark.operators.segments import (
+            _collect_queries,
+            segment_knn,
             segment_knn_distributed,
-            segment_knn_sq8,
         )
 
         if _pick_distributed(distributed, queries):
@@ -283,11 +284,8 @@ def ann_topk(
                 index.handle, queries, k, index.metric, scoring=scoring,
                 query_id_col=query_id_col, query_vector_col=query_vector_col,
             )
-        qrows = [
-            (r[query_id_col], np.asarray(r[query_vector_col]))
-            for r in queries.select(query_id_col, query_vector_col).collect()
-        ]
-        return segment_knn_sq8(index.handle, qrows, k, index.metric, scoring=scoring)
+        qrows = _collect_queries(queries, query_id_col, query_vector_col)
+        return segment_knn(index.handle, qrows, k, index.metric, scoring=scoring)
     if index.method == "ivf":
         seg, model = index.handle
         if _pick_distributed(distributed, queries):
@@ -380,10 +378,9 @@ def ann_topk(
                 query_id_col=query_id_col, query_vector_col=query_vector_col,
             )
         else:
-            qrows = [
-                (r[query_id_col], np.asarray(r[query_vector_col]))
-                for r in queries.select(query_id_col, query_vector_col).collect()
-            ]
+            from pyrope_spark.operators.segments import _collect_queries
+
+            qrows = _collect_queries(queries, query_id_col, query_vector_col)
             hits = segment_knn_bq(index.handle, qrows, k)
         from pyspark.sql import functions as F
 
@@ -444,14 +441,15 @@ def sq8_rerank_topk(
             query_id_col=query_id_col, query_vector_col=query_vector_col,
         ).select(F.col(query_id_col).alias("query_id"), "id")
     elif impl == "segments":
-        from pyrope_spark.operators.segments import pack_segments_sq8, segment_knn_sq8
+        from pyrope_spark.operators.segments import (
+            _collect_queries,
+            pack_segments_sq8,
+            segment_knn,
+        )
 
         seg = pack_segments_sq8(vectors, id_col=id_col, vector_col=vector_col)
-        qrows = [
-            (r[query_id_col], np.asarray(r[query_vector_col]))
-            for r in queries.select(query_id_col, query_vector_col).collect()
-        ]
-        coarse = segment_knn_sq8(seg, qrows, rerank, metric, scoring="byte").select(
+        qrows = _collect_queries(queries, query_id_col, query_vector_col)
+        coarse = segment_knn(seg, qrows, rerank, metric, scoring="byte").select(
             "query_id", "id"
         )
     else:

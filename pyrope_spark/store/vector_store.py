@@ -105,7 +105,13 @@ class VectorStore:
         ``pairs`` restricts the view to the given ``(tenant_id, index_name)``
         partitions — equality predicates on the partition columns, so the
         scan prunes to only the touched directories (verified by
-        ``tests/test_store.py`` plan assertion)."""
+        ``tests/test_store.py`` plan assertion).
+
+        With no head directory the view is the pruned tail as stored, with
+        no latest-wins window (a full shuffle): only :meth:`compact` writes
+        the tail, and it writes a resolved snapshot, one record per key."""
+        if not os.path.exists(self.head_path):
+            return self._scan(tenant_id, index_name, pairs, head=False)
         return _latest(self._scan(tenant_id, index_name, pairs))
 
     def _head_of(self, tenant_id: str, index_name: str) -> DataFrame:
@@ -158,9 +164,14 @@ class VectorStore:
         tenant_id: str | None = None,
         index_name: str | None = None,
         pairs: list[tuple[str, str]] | None = None,
+        head: bool = True,
     ) -> DataFrame:
-        """Raw (unresolved) head ∪ tail scan with partition pruning."""
-        df = self._read(self.head_path).unionByName(self._read(self.tail_path))
+        """Raw (unresolved) head ∪ tail scan with partition pruning;
+        ``head=False`` scans the tail alone (a missing head would otherwise
+        still cost an empty-RDD scan per action)."""
+        df = self._read(self.tail_path)
+        if head:
+            df = self._read(self.head_path).unionByName(df)
         if tenant_id is not None:
             df = df.filter(F.col("tenant_id") == tenant_id)
         if index_name is not None:

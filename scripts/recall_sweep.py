@@ -127,7 +127,7 @@ def main() -> None:
 
     # ---- HNSW (numpy graph) and SQ8 paths
     from pyrope_spark.operators.hnsw import hnsw_partition_search
-    from pyrope_spark.operators.segments import pack_segments_sq8, segment_knn_sq8
+    from pyrope_spark.operators.segments import pack_segments_sq8, segment_knn
     from pyrope_spark.operators.similarity import sq8_rerank_topk
 
     lines += ["", "## HNSW (numpy graph, m=16, efConstruction=200; L2)", "",
@@ -143,7 +143,7 @@ def main() -> None:
     import numpy as _np
     qnp = [(qid, _np.asarray(v)) for qid, v in qrows]
     for scoring in ("dequant", "byte"):
-        hits = segment_knn_sq8(seg8, qnp, K, "l2", scoring=scoring)
+        hits = segment_knn(seg8, qnp, K, "l2", scoring=scoring)
         lines.append(f"| {scoring} scan | {ivf_recall(hits, exact, K):.3f} |")
     rr = sq8_rerank_topk(vectors, qs, k=K, rerank=3 * K, metric="l2")
     lines.append(f"| byte coarse + rerank 3k | {ivf_recall(rr, exact, K):.3f} |")

@@ -151,3 +151,24 @@ def test_bpe_train_driver_matches_spark_impl(spark):
     vd = {r["word"]: (r["freq"], list(r["syms"])) for r in v_d.collect()}
     vs = {r["word"]: (r["freq"], list(r["syms"])) for r in v_s.collect()}
     assert vd == vs
+
+
+def test_bpe_auto_under_cap_aggregates_corpus_once(spark):
+    """The auto path persists word_freqs before its size probe, so the probe
+    and the driver-path collect share one aggregation: every corpus row is
+    read once. (Counting jobs cannot show it — AQE splits the persisted
+    probe into as many jobs as the second aggregation cost.)"""
+    from pyrope_spark.operators.bpe import bpe_train
+
+    sc = spark.sparkContext
+    rows_read = sc.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            rows_read.add(len(pdf))
+            yield pdf
+
+    docs = _docs(spark)
+    merges, _ = bpe_train(docs.mapInPandas(count_rows, docs.schema), num_merges=3)
+    assert merges.count() == 3
+    assert rows_read.value == docs.count()

@@ -550,3 +550,23 @@ def test_token_fp_rows_matches_expression_path(spark):
             for r in token_fp_rows(docs, ngram_n=n).collect()
         )
         assert arrow == expr, f"ngram_n={n}"
+
+
+def test_connected_components_releases_round_checkpoints(spark):
+    """Each round releases the previous round's checkpointed labels (and the
+    edge table on return), so the persisted RDDs a call leaves behind do not
+    grow with the number of rounds."""
+    from pyrope_spark.operators.dedup import connected_components
+
+    jsc = spark.sparkContext._jsc
+
+    def left_persisted(n_nodes):
+        before = set(jsc.getPersistentRDDs().keySet())
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(1, n_nodes)], "src long, dst long"
+        )
+        out = connected_components(edges)
+        assert {r["component"] for r in out.collect()} == {1}
+        return len(set(jsc.getPersistentRDDs().keySet()) - before)
+
+    assert left_persisted(3) == left_persisted(12) == 1

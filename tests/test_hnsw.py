@@ -3,18 +3,10 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from pyrope_spark.operators.hnsw import HAVE_HNSWLIB, NumpyHnsw, hnsw_partition_search
+from pyrope_spark.operators.hnsw import NumpyHnsw, hnsw_partition_search
 from pyrope_spark.operators.ivf import ivf_recall
 from pyrope_spark.operators.knn import knn_bruteforce
 from tests.conftest import make_queries_df, make_vectors_df
-
-
-def test_hnswlib_impl_raises_when_absent(spark):
-    vectors = make_vectors_df(spark, n=50, dim=8, del_frac=0.0)
-    queries = make_queries_df(spark, n=2, dim=8)
-    if not HAVE_HNSWLIB:
-        with pytest.raises(Exception, match="hnswlib"):
-            hnsw_partition_search(vectors, queries, k=5, impl="hnswlib").collect()
 
 
 def test_partition_merge_plumbing_exact_fallback(spark):
@@ -121,15 +113,6 @@ def test_max_shard_rows_bound(spark):
     assert ivf_recall(got, exact, 10) >= 0.9
     with pytest.raises(ValueError, match="max_shard_rows"):
         hnsw_partition_search(vectors, queries, k=10, max_shard_rows=0)
-
-
-@pytest.mark.skipif(not HAVE_HNSWLIB, reason="hnswlib not installed")
-def test_hnsw_recall_hnswlib(spark):
-    vectors = make_vectors_df(spark, n=500, dim=16, del_frac=0.0).repartition(4)
-    queries = make_queries_df(spark, n=8, dim=16)
-    got = hnsw_partition_search(vectors, queries, k=10, impl="hnswlib")
-    exact = knn_bruteforce(vectors, queries, k=10, metric="l2")
-    assert ivf_recall(got, exact, 10) >= 0.7
 
 
 @pytest.mark.parametrize("metric", ["l2", "ip", "cosine"])

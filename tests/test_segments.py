@@ -49,7 +49,7 @@ def test_sq8_segments_recall(data, spark):
     error only — reference trades this for the 1.54x scan speedup)."""
     import numpy as np
 
-    from pyrope_spark.operators.segments import pack_segments_sq8, segment_knn_sq8
+    from pyrope_spark.operators.segments import pack_segments_sq8, segment_knn
 
     vectors, queries = data
     seg = pack_segments_sq8(vectors, rows_per_segment=128).cache()
@@ -60,7 +60,7 @@ def test_sq8_segments_recall(data, spark):
         (r["query_id"], np.asarray(r["vector"]))
         for r in queries.select("query_id", "vector").collect()
     ]
-    approx = segment_knn_sq8(seg, qrows, 10, "l2")
+    approx = segment_knn(seg, qrows, 10, "l2", scoring="dequant")
     from pyrope_spark.operators.ivf import ivf_recall
 
     exact = knn_bruteforce(vectors, queries, k=10, metric="l2")
@@ -142,7 +142,7 @@ def test_sq8_byte_domain_recall(data, spark):
     import numpy as np
 
     from pyrope_spark.operators.ivf import ivf_recall
-    from pyrope_spark.operators.segments import pack_segments_sq8, segment_knn_sq8
+    from pyrope_spark.operators.segments import pack_segments_sq8, segment_knn
 
     vectors, queries = data
     seg = pack_segments_sq8(vectors, rows_per_segment=128).cache()
@@ -150,12 +150,12 @@ def test_sq8_byte_domain_recall(data, spark):
         (r["query_id"], np.asarray(r["vector"]))
         for r in queries.select("query_id", "vector").collect()
     ]
-    byte = segment_knn_sq8(seg, qrows, 10, "l2", scoring="byte")
+    byte = segment_knn(seg, qrows, 10, "l2", scoring="byte")
     exact = knn_bruteforce(vectors, queries, k=10, metric="l2")
     r = ivf_recall(byte, exact, 10)
     assert r >= 0.6, r
     # dequant scoring should be at least as good
-    deq = segment_knn_sq8(seg, qrows, 10, "l2")
+    deq = segment_knn(seg, qrows, 10, "l2", scoring="dequant")
     assert ivf_recall(deq, exact, 10) >= r - 1e-9
 
 

@@ -61,15 +61,26 @@ def test_facade_hnsw_and_distributed_and_byte(spark):
     assert ivf_recall(byte, exact, 10) >= 0.6
 
 
+@pytest.mark.parametrize("metric", ["l2", "ip", "cosine"])
 @pytest.mark.parametrize("method,scoring", [
     ("segments", "float"), ("sq8", "dequant"), ("sq8", "byte"),
 ])
-def test_distributed_block_join_matches_collect_path(spark, method, scoring):
+def test_distributed_block_join_matches_collect_path(spark, method, scoring, metric):
     """The packed-query block-join path must return exactly what the
-    collect+broadcast path returns, for float and both SQ8 scorings."""
+    collect+broadcast path returns, for float and both SQ8 scorings, on
+    every metric — including a zero-norm corpus row and a zero-norm query,
+    which cosine scores 0."""
     vectors = make_vectors_df(spark, n=400, dim=16, del_frac=0.0)
+    vectors = vectors.unionByName(
+        spark.createDataFrame(
+            [("t1", "idx1", "zero", [0.0] * 16, None, [], False)], vectors.schema
+        )
+    )
     queries = make_queries_df(spark, n=7, dim=16, k=10)
-    idx = build_similarity_index(vectors, method=method, metric="l2",
+    queries = queries.unionByName(
+        spark.createDataFrame([("qzero", [0.0] * 16, 10, [])], queries.schema)
+    )
+    idx = build_similarity_index(vectors, method=method, metric=metric,
                                  rows_per_segment=64)
     key = lambda df: sorted((r["query_id"], r["rank"], r["id"]) for r in df.collect())
     small = ann_topk(idx, queries, k=10, scoring=scoring, distributed=False)

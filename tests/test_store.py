@@ -168,3 +168,33 @@ def test_write_path_partition_pruning(spark, tmp_path):
     assert "PartitionFilters" in plan
     # both partition columns constrained (pruned to the single touched dir)
     assert "tenant_id" in plan.split("PartitionFilters")[1][:200]
+
+
+def test_live_after_compact_reads_tail_without_window(spark, tmp_path):
+    """compact() leaves no head, so live() reads the resolved tail as stored:
+    no latest-wins Window in its plan, and the same rows as the windowed
+    path. The next write brings the head, and the window, back."""
+    from pyrope_spark.store.vector_store import _latest
+
+    st = _store(spark, tmp_path)
+    st.add(_df(spark, [("t", "i", f"v{j}", [float(j), 0.0], None, []) for j in range(10)]))
+    st.upsert(_df(spark, [("t", "i", "v3", [30.0, 0.0], None, [])]))
+    st.delete([("t", "i", "v4")])
+    st.compact()
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    def rows(df):
+        return sorted((r["id"], tuple(r["vector"]), r["_seq"]) for r in df.collect())
+
+    live = st.live("t", "i")
+    assert "Window" not in plan(live)
+    windowed = _latest(st._scan("t", "i")).filter(~F.col("deleted"))
+    assert rows(live) == rows(windowed)
+    assert [r[0] for r in rows(live)] == [f"v{j}" for j in range(10) if j != 4]
+
+    st.upsert(_df(spark, [("t", "i", "v5", [50.0, 0.0], None, [])]))
+    live = st.live("t", "i")
+    assert "Window" in plan(live)
+    assert {r["id"]: r["vector"][0] for r in live.collect()}["v5"] == 50.0
