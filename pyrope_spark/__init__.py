@@ -10,8 +10,9 @@ Architecture (Spark-first, NOT a port):
   ``aggregate`` → whole-stage codegen) with a vectorized numpy/Arrow GEMM
   path for the batch hot loop — reference: SIMD kernels
   (``src/Pyrope.GarnetServer/Vector/VectorMath.cs``).
-- ANN indexes (IVF-Flat / IVF-PQ) are MLlib KMeans + cluster-partitioned
-  tables; centroid probing becomes partition pruning — reference:
+- ANN indexes (IVF-Flat / IVF-PQ) are a driver-side k-means over a bounded
+  sample + cluster-partitioned tables; centroid probing becomes partition
+  pruning — reference:
   ``Vector/IvfFlatVectorIndex.cs``, ``Vector/IvfPqVectorIndex.cs``.
 - The LSM head/tail split is two tables + a union-dedup view; compaction is
   a batch job — reference: ``Vector/DeltaVectorIndex.cs``.

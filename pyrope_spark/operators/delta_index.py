@@ -10,7 +10,9 @@ Reference: ``src/Pyrope.GarnetServer/Vector/DeltaVectorIndex.cs`` —
 
 Spark-first composition (no new physical machinery):
 - tail = packed segments partitioned by cluster_id + a centroid table
-  (``operators/segments.py`` + MLlib KMeans from ``operators/ivf.py``);
+  (``operators/segments.py`` + the driver-side k-means of
+  ``operators/ivf.py``: one bounded sample collect, the assignment fused
+  into the segment pack job);
 - head = the store's append-only head parquet; it is small between
   compactions by construction, so a search pulls it to the driver;
 - search is ONE eager pass of three Spark jobs, the reference's single
@@ -19,8 +21,8 @@ Spark-first composition (no new physical machinery):
   scan kernel. The driver scores the live head rows and merges them with the
   tail's per-partition top-K — any head record (live or tombstone) shadows
   its tail id, exactly the reference dedup rule;
-- Build() = ``VectorStore.compact()`` + KMeans + segment pack + centroid
-  write, all one batch job; the registry epoch bump invalidates caches (C8).
+- Build() = ``VectorStore.compact()`` + k-means fit + segment pack +
+  centroid write; the registry epoch bump invalidates caches (C8).
   Each build stamps a fresh build id into the centroid parquet's metadata,
   which keys the per-build cache of the loaded segment relation.
 """
@@ -74,7 +76,9 @@ def build_delta_index(
     if metric is None:
         metric = meta.metric if meta else "l2"
     store.compact()
-    assigned, model = build_ivf(store.live(tenant_id, index_name), nlist=nlist, metric=metric)
+    assigned, model = build_ivf(
+        store.live(tenant_id, index_name).select("id", "vector"), nlist=nlist, metric=metric
+    )
     seg = pack_segments(
         assigned, id_col="id", vector_col="vector", cluster_col="cluster_id",
         rows_per_segment=rows_per_segment,

@@ -145,7 +145,7 @@ class NumpyHnsw:
         A = self._mat32[ai]
         B = self._mat32[bi]
         # NOTE r4: np.dot(A, ascontiguousarray(B.T)) was tried here (the
-        # contiguous-RHS BLAS win from pq._lloyd_fit) and measured 2.2x
+        # contiguous-RHS BLAS win from ivf.lloyd_fit) and measured 2.2x
         # SLOWER end-to-end — B is the large side in the NN-descent calls,
         # so the per-call transpose copy dominates the GEMM. Keep `@`.
         G = A @ B.T

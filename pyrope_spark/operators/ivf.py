@@ -1,4 +1,4 @@
-"""IVF-Flat index: MLlib KMeans coarse quantizer + cluster-partitioned data.
+"""IVF-Flat index: driver-side k-means coarse quantizer + cluster-partitioned data.
 
 Reference: ``src/Pyrope.GarnetServer/Vector/IvfFlatVectorIndex.cs`` —
 build = k-means (k = min(nlist, n), seed 42, maxIter 10,
@@ -7,9 +7,15 @@ inverted lists (``:147-231``), plus an exact scan of the unbuilt buffer
 (covered in this engine by the store's head table).
 
 Spark-first design:
-- Build is one batch job: ``KMeans.fit`` (k-means|| init — strictly better
-  than the reference's random init) -> ``cluster_id`` column -> write
-  partitioned by ``cluster_id``. The "inverted list" IS the partition.
+- Build collects one bounded, seeded fit sample (:func:`fit_sample`: at
+  most ``max(10k, 256*nlist)`` rows, tens of MB) and fits k-means on the
+  driver with seeded random-init Lloyd iterations (:func:`lloyd_fit`, the
+  reference's own init, ``KMeansUtils.cs:10-68``). The training set is
+  capped by construction, so a distributed fit would be pure per-job
+  scheduling overhead. The ``cluster_id`` column is one lazy Arrow GEMM
+  pass (:func:`nearest_centroid`) that fuses into the caller's pack or
+  encode job; written partitioned by ``cluster_id``, the "inverted list"
+  IS the partition.
 - Probe selection runs driver-side over the (tiny) centroid matrix with the
   index metric (reference FindNearestCentroid, ``KMeansUtils.cs:70-93``),
   producing a small probes DataFrame that is broadcast-joined against the
@@ -19,9 +25,11 @@ Spark-first design:
   storage partitioning.
 - Scoring/top-K reuse the brute-force operator on the pruned candidate set.
 
-Metric handling: MLlib KMeans supports euclidean + cosine distance. L2 and
-cosine map directly; for inner-product indexes we train on L2 (same as the
-reference, whose k-means mean-update is L2-style regardless of metric,
+Metric handling: L2 indexes train and assign with L2. Cosine indexes fit
+spherical k-means (unit rows, centers renormalized every iteration) and
+assign by cosine; zero-norm rows stay out of the fit and land in cluster 0.
+Inner-product indexes train and assign on L2 (same as the reference, whose
+k-means mean-update is L2-style regardless of metric,
 ``KMeansUtils.cs:46-62``) while probe *selection* uses the IP score, matching
 reference search behavior (``IvfFlatVectorIndex.cs:183-218``).
 """
@@ -31,8 +39,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.ml.clustering import KMeans
-from pyspark.ml.functions import array_to_vector
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -42,6 +48,7 @@ from pyrope_spark.operators.knn import knn_bruteforce, score_matrix
 DEFAULT_NPROBE = 3  # reference: IvfFlatVectorIndex.cs:14
 DEFAULT_SEED = 42  # reference: IvfFlatVectorIndex.cs:116
 DEFAULT_MAX_ITER = 10  # reference: KMeansUtils.cs Train default
+_ZERO_NORM = 1e-6  # cosine guard, as in the score expressions
 
 
 @dataclass
@@ -49,6 +56,170 @@ class IvfModel:
     centroids: np.ndarray  # nlist x dim, float64
     metric: str
     nlist: int
+
+
+def _list_matrix(arr) -> np.ndarray:
+    """(n x dim) float64 matrix of an Arrow list<float|double> column."""
+    vals = arr.flatten().to_numpy(zero_copy_only=False)
+    return vals.astype(np.float64).reshape(len(arr), -1)
+
+
+def fit_sample(
+    vectors: DataFrame,
+    vector_col: str,
+    k: int,
+    *,
+    seed: int,
+    fit_fraction: float | None = None,
+) -> np.ndarray:
+    """The bounded, seeded training sample of a k-centroid fit as a float64
+    driver matrix: one count, then one collect (no count when
+    ``fit_fraction`` is given). Without ``fit_fraction``,
+    tables above ``max(10k, 256*k)`` rows are sampled down to about that
+    many — the faiss convention (256 points per centroid saturates centroid
+    quality); a ``fit_fraction`` in (0, 1) samples that fraction instead,
+    and ``fit_fraction >= 1`` takes every row. Rows come back in a canonical
+    order (sorted by their bytes), so a fit seeded on them does not depend
+    on the input's partitioning."""
+    src = vectors
+    if fit_fraction is not None and 0.0 < fit_fraction < 1.0:
+        src = vectors.sample(fraction=fit_fraction, seed=seed)
+    elif fit_fraction is None:
+        n, cap = vectors.count(), max(10_000, 256 * k)
+        if n > cap:
+            src = vectors.sample(fraction=cap / n, seed=seed)
+    col = src.select(F.col(vector_col).alias("_v")).toArrow().column("_v")
+    if not len(col):
+        return np.zeros((0, 0))
+    mat = np.ascontiguousarray(_list_matrix(col.combine_chunks()))
+    rows = mat.view(np.dtype((np.void, mat.itemsize * mat.shape[1]))).ravel()
+    return mat[np.argsort(rows, kind="stable")]
+
+
+def lloyd_fit(
+    x: np.ndarray, k: int, seed: int, iters: int, *, spherical: bool = False
+) -> np.ndarray:
+    """Seeded random-init Lloyd iterations, vectorized: the one k-means of
+    the IVF coarse quantizer and the PQ codebooks. Random init is the
+    REFERENCE's own choice (KMeansUtils.cs:18-20: "K-Means++ is preferred,
+    but random is OK for MVP"). Assignment is a row-chunked float32 GEMM
+    (bounded memory under any n), updates are per-dim bincounts (np.add.at
+    is unbuffered and ~10x slower). Deterministic for a given
+    (x, k, seed, iters); empty clusters keep their previous center.
+
+    ``spherical``: cosine k-means, as MLlib's cosine KMeans — fit on unit
+    rows and renormalize the centers after every update (on unit centers
+    the L2 argmin is the cosine argmax). Rows of norm below 1e-6 have no
+    direction and stay out of the fit; when none is left, the model is one
+    zero center. Returns min(k, rows fitted) centers, float64."""
+    x32 = np.ascontiguousarray(x, dtype=np.float32)
+    if spherical:
+        norms = np.linalg.norm(x32, axis=1)
+        keep = norms >= _ZERO_NORM
+        x32 = np.ascontiguousarray(x32[keep] / norms[keep, None])
+        if not len(x32):
+            return np.zeros((1, x.shape[1]))
+    n, d = x32.shape
+    k = min(k, n)
+    rng = np.random.default_rng(seed)
+    centers = x32[rng.choice(n, size=k, replace=False)].copy()
+    xT = np.ascontiguousarray(x32.T)  # contiguous per-dim weights: ~3x faster bincounts
+    assign = np.empty(n, dtype=np.int64)
+    CH = 16384
+    for _ in range(iters):
+        # argmin_c |x-c|^2 == argmin_c (|c|^2 - 2 x.c): the |x|^2 term is
+        # row-constant. np.dot with a CONTIGUOUS transposed operand — the
+        # `x @ centers.T` form hits a 20x slower non-contiguous BLAS path
+        # on this OpenBLAS build (measured, PLANS.md r4).
+        cT = np.ascontiguousarray(centers.T)
+        c2 = np.einsum("ij,ij->i", centers, centers)
+        for i0 in range(0, n, CH):
+            i1 = min(i0 + CH, n)
+            dch = np.dot(x32[i0:i1], cT)
+            dch *= -2.0
+            dch += c2[None, :]
+            assign[i0:i1] = dch.argmin(axis=1)
+        counts = np.bincount(assign, minlength=k)
+        sums = np.empty((k, d), dtype=np.float64)
+        for t in range(d):
+            sums[:, t] = np.bincount(assign, weights=xT[t], minlength=k)
+        live = counts > 0
+        upd = centers.astype(np.float64)
+        upd[live] = sums[live] / counts[live, None]
+        if spherical:
+            norm = np.linalg.norm(upd, axis=1)
+            ok = live & (norm >= _ZERO_NORM)
+            upd[ok] /= norm[ok, None]
+            upd[live & ~ok] = centers[live & ~ok]
+        centers = upd.astype(np.float32)
+    return centers.astype(np.float64)
+
+
+def nearest_centroid(x: np.ndarray, centroids: np.ndarray, metric: str) -> np.ndarray:
+    """Index of each row's best centroid under ``metric``, ties to the
+    lowest id (argmin/argmax take the first): l2 ranks ``|c|^2 - 2 x.c``
+    (the row-constant ``|x|^2`` dropped), ip ``x.c``, cosine
+    ``x.c / (|x| |c|)`` with the score expressions' zero-norm guard (score
+    0, so a zero row goes to cluster 0). Row-chunked float64 GEMM; the
+    executor kernel of :func:`build_ivf` and :func:`assign_by_centroids_gemm`
+    and the driver-side residuals of ``pq.build_ivf_pq`` all call it."""
+    c = np.asarray(centroids, dtype=np.float64)
+    cT = np.ascontiguousarray(c.T)
+    cn2 = np.einsum("ij,ij->i", c, c)
+    cnorm = np.sqrt(cn2)
+    out = np.empty(len(x), dtype=np.int64)
+    CH = 16384
+    for i0 in range(0, len(x), CH):
+        xb = np.asarray(x[i0 : i0 + CH], dtype=np.float64)
+        dots = np.dot(xb, cT)
+        if metric == "l2":
+            best = np.argmin(cn2[None, :] - 2.0 * dots, axis=1)
+        elif metric == "ip":
+            best = np.argmax(dots, axis=1)
+        else:
+            denom = np.outer(np.linalg.norm(xb, axis=1), cnorm)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                sim = np.where(denom < _ZERO_NORM, 0.0, dots / denom)
+            best = np.argmax(sim, axis=1)
+        out[i0 : i0 + len(xb)] = best
+    return out
+
+
+def _assign(
+    vectors: DataFrame,
+    centroids: np.ndarray,
+    metric: str,
+    *,
+    vector_col: str,
+    cluster_col: str,
+    keep: list[str] | None = None,
+) -> DataFrame:
+    """``keep`` columns (default: all) + ``cluster_col`` int: one lazy
+    ``mapInArrow`` pass, :func:`nearest_centroid` per Arrow batch against
+    the broadcast centroids. Kept columns pass through as Arrow, unconverted."""
+    from pyspark.sql import types as T
+
+    cols = list(vectors.columns) if keep is None else list(keep)
+    bc = vectors.sparkSession.sparkContext.broadcast(
+        np.asarray(centroids, dtype=np.float64)
+    )
+    schema = T.StructType(
+        [vectors.schema[c] for c in cols]
+        + [T.StructField(cluster_col, T.IntegerType())]
+    )
+
+    def assign(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            if not b.num_rows:
+                continue
+            best = nearest_centroid(_list_matrix(b.column(vector_col)), bc.value, metric)
+            yield b.select(cols).append_column(
+                cluster_col, pa.array(best, type=pa.int32())
+            )
+
+    return vectors.mapInArrow(assign, schema)
 
 
 def build_ivf(
@@ -60,51 +231,39 @@ def build_ivf(
     seed: int = DEFAULT_SEED,
     max_iter: int = DEFAULT_MAX_ITER,
     cluster_col: str = "cluster_id",
-    init_mode: str = "random",
     fit_fraction: float | None = None,
+    sample: np.ndarray | None = None,
 ) -> tuple[DataFrame, IvfModel]:
     """Fit the coarse quantizer and return (vectors + cluster_id, model).
 
-    k = min(nlist, row_count) — reference IvfFlatVectorIndex.cs:116-119.
-    ``init_mode='random'`` mirrors the reference (KMeansUtils.cs:10-68 random
-    init) and is markedly cheaper to build; pass 'k-means||' for the higher
-    quality MLlib default when build cost is amortized.
+    k = min(nlist, rows fitted) — reference IvfFlatVectorIndex.cs:116-119.
+    The fit is :func:`lloyd_fit` (seeded random init, ``max_iter`` Lloyd
+    iterations; spherical for ``metric='cosine'``) over the driver sample
+    :func:`fit_sample` collects: the whole table up to ``max(10k,
+    256*nlist)`` rows, a seeded sample of about that size above it, or a
+    ``fit_fraction`` sample when given (``fit_fraction=1.0`` forces a full
+    fit). Centroid quality degrades negligibly once the sample is >> k
+    (rule of thumb >= 100*k rows). ``sample``: fit on these rows (from
+    :func:`fit_sample`) instead of collecting, for a caller that needs the
+    sample itself too.
 
-    ``fit_fraction``: fit the KMeans on a seeded sample of the data and
-    transform (assign) everything — the large-N build path. Centroid
-    quality degrades negligibly once the sample is >> k (rule of thumb
-    >= 100*k rows); assignment cost is unchanged. When ``fit_fraction`` is
-    not given, builds over large tables automatically cap the training set
-    at ``max(10k, 256*k)`` seeded-sampled rows — the faiss convention
-    (256 points per centroid saturates centroid quality); pass
-    ``fit_fraction=1.0`` to force a full fit.
-    """
+    The returned DataFrame is lazy: every input column plus ``cluster_col``
+    (int), the nearest centroid by the training distance — L2 for l2 and
+    ip, cosine for cosine — computed by one Arrow GEMM pass each time it
+    is evaluated."""
     metric = normalize_metric(metric)
-    n = vectors.count()
-    k = min(nlist, n)
-    if k < 1:
-        raise ValueError("cannot build IVF over an empty table")
-    feat = vectors.withColumn("_features", array_to_vector(F.col(vector_col)))
-    fit_src = feat
-    if fit_fraction is not None and 0.0 < fit_fraction < 1.0:
-        fit_src = feat.sample(fraction=fit_fraction, seed=seed)
-    elif fit_fraction is None:
-        cap = max(10_000, 256 * k)
-        if n > cap:
-            fit_src = feat.sample(fraction=cap / n, seed=seed)
-    km = KMeans(
-        k=k,
-        maxIter=max_iter,
-        seed=seed,
-        featuresCol="_features",
-        predictionCol=cluster_col,
-        distanceMeasure="cosine" if metric == "cosine" else "euclidean",
-        initMode=init_mode,
+    if sample is None:
+        sample = fit_sample(
+            vectors, vector_col, nlist, seed=seed, fit_fraction=fit_fraction
+        )
+    if not len(sample):
+        raise ValueError("cannot build IVF over an empty table (or empty fit sample)")
+    cents = lloyd_fit(sample, nlist, seed, max_iter, spherical=metric == "cosine")
+    assigned = _assign(
+        vectors, cents, "cosine" if metric == "cosine" else "l2",
+        vector_col=vector_col, cluster_col=cluster_col,
     )
-    model = km.fit(fit_src)
-    assigned = model.transform(feat).drop("_features")
-    centroids = np.asarray([c for c in model.clusterCenters()], dtype=np.float64)
-    return assigned, IvfModel(centroids=centroids, metric=metric, nlist=k)
+    return assigned, IvfModel(centroids=cents, metric=metric, nlist=len(cents))
 
 
 def fixed_ivf_model(
@@ -146,8 +305,9 @@ def assign_by_centroids(
     centroid table, score with the metric expression, keep the argbest per
     row (tie -> lowest centroid id). Same construction as the DuckDB oracle's
     ``row_number() OVER (PARTITION BY id ORDER BY dist, cid)``, so the two
-    agree exactly. For the bulk path prefer ``build_ivf``'s MLlib transform;
-    this one exists for fixed/oracle models and small literal centroid sets."""
+    agree exactly. For bulk assignment prefer :func:`assign_by_centroids_gemm`
+    (or ``build_ivf``'s own ``cluster_id``); this one exists for fixed/oracle
+    models and small literal centroid sets."""
     from pyspark.sql import Window
 
     from pyrope_spark.functions.vector import norm as norm_expr
@@ -188,53 +348,20 @@ def assign_by_centroids_gemm(
     vector_col: str = "vector",
     cluster_col: str = "cluster_id",
 ) -> DataFrame:
-    """Bulk nearest-centroid assignment: one ``mapInPandas`` pass with a
-    numpy GEMM per Arrow batch against the broadcast centroid matrix —
-    the scale path for FIXED centroid sets (the expression path above is
-    oracle-grade but interpreter-bound: measured 109 s vs 3 s at 1M x d64
-    x 64 centroids in the round-4 drift probe). Tie -> lowest centroid id
-    (argmax/argmin take the first), matching :func:`assign_by_centroids`;
+    """Bulk nearest-centroid assignment by the model metric: the Arrow GEMM
+    kernel of :func:`build_ivf` (:func:`nearest_centroid` per batch against
+    the broadcast centroid matrix), returning ``(id, cluster_id)`` — the
+    scale path for an EXISTING centroid table (drift monitors, re-assignment
+    jobs; the expression path above is oracle-grade but interpreter-bound:
+    measured 109 s vs 3 s at 1M x d64 x 64 centroids in the round-4 drift
+    probe). Tie -> lowest centroid id, matching :func:`assign_by_centroids`;
     near-tie float divergence between the two paths is possible in theory
     (GEMM computes -2xc + ||c||^2 rather than sum((x-c)^2)) — parity is
-    pytest-gated on random data. For model-trained bulk assignment prefer
-    ``build_ivf``'s MLlib transform; this one serves drift monitors and
-    re-assignment jobs that must reuse an EXISTING centroid table."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    cents = np.asarray(model.centroids, dtype=np.float64)
-    metric = model.metric
-    spark = vectors.sparkSession
-    bc = spark.sparkContext.broadcast(cents)
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c = bc.value
-        cn2 = (c * c).sum(axis=1)
-        cnorm = np.sqrt(cn2)
-        for b in batches:
-            if not len(b):
-                continue
-            x = np.vstack(b[vector_col].to_numpy()).astype(np.float64)
-            dots = x @ c.T
-            if metric == "l2":
-                best = np.argmin(cn2[None, :] - 2.0 * dots, axis=1)
-            elif metric == "ip":
-                best = np.argmax(dots, axis=1)
-            else:  # cosine (zero-norm guard -> score 0, like score_expr)
-                xn = np.linalg.norm(x, axis=1)
-                denom = np.outer(xn, cnorm)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sim = np.where(denom < 1e-6, 0.0, dots / denom)
-                best = np.argmax(sim, axis=1)
-            yield pd.DataFrame(
-                {"id": b[id_col].to_numpy(), "cid": best.astype("int32")}
-            )
-
-    out = vectors.select(F.col(id_col), F.col(vector_col)).mapInPandas(
-        assign, schema=f"id {dict(vectors.select(id_col).dtypes)[id_col]}, cid int"
+    pytest-gated on random data."""
+    return _assign(
+        vectors, model.centroids, model.metric,
+        vector_col=vector_col, cluster_col=cluster_col, keep=[id_col],
     )
-    return out.select(F.col("id").alias(id_col), F.col("cid").alias(cluster_col))
 
 
 def write_ivf_table(assigned: DataFrame, path: str, cluster_col: str = "cluster_id") -> None:
@@ -666,7 +793,8 @@ def ivf_append_segments(
     """Incremental IVF ingest: pack NEW vectors into segment rows that
     slot into an EXISTING packed-segment table without rebuilding it — the
     IVF analog of the incremental BM25 postings update. Assignment reuses
-    the index's centroids (``assign_by_centroids_gemm`` — the index
+    the index's centroids (the :func:`assign_by_centroids_gemm` kernel, by
+    the model metric, with the vectors carried through — the index
     contract is that search probes those exact cells), and each cluster's
     new ``segment_no`` continues after its current maximum, so the union
     (or a bucketed-table append) is a valid segment table: search results
@@ -685,10 +813,9 @@ def ivf_append_segments(
     """
     from pyrope_spark.operators.segments import pack_segments
 
-    assigned = assign_by_centroids_gemm(
-        new_vectors, model, id_col=id_col, vector_col=vector_col
-    ).join(
-        new_vectors.select(F.col(id_col), F.col(vector_col)), id_col
+    assigned = _assign(
+        new_vectors.select(id_col, vector_col), model.centroids, model.metric,
+        vector_col=vector_col, cluster_col="cluster_id",
     )
     packed = pack_segments(
         assigned, id_col=id_col, vector_col=vector_col,

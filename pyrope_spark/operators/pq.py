@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pyrope_spark.operators.ivf import fit_sample, lloyd_fit
 from pyrope_spark.operators.knn import RESULT_SCHEMA
 from pyrope_spark.operators.segments import _topk_frame
 from pyrope_spark.operators.topk import topk_per_group
@@ -54,43 +55,6 @@ class PqModel:
         return self.m * self.dsub
 
 
-def _lloyd_fit(x: np.ndarray, k: int, seed: int, iters: int) -> np.ndarray:
-    """Seeded random-init Lloyd iterations, vectorized. Random init is the
-    REFERENCE's own choice (KMeansUtils.cs:18-20: "K-Means++ is preferred,
-    but random is OK for MVP"). Assignment is a row-chunked float32 GEMM
-    (bounded memory under any n), updates are per-dim bincounts (np.add.at
-    is unbuffered and ~10x slower). Deterministic for a given
-    (x, k, seed, iters); empty clusters keep their previous center."""
-    x32 = np.ascontiguousarray(x, dtype=np.float32)
-    n, d = x32.shape
-    rng = np.random.default_rng(seed)
-    centers = x32[rng.choice(n, size=min(k, n), replace=False)].copy()
-    assign = np.empty(n, dtype=np.int64)
-    CH = 16384
-    for _ in range(iters):
-        # argmin_c |x-c|^2 == argmin_c (|c|^2 - 2 x.c): the |x|^2 term is
-        # row-constant. np.dot with a CONTIGUOUS transposed operand — the
-        # `x @ centers.T` form hits a 20x slower non-contiguous BLAS path
-        # on this OpenBLAS build (measured, PLANS.md r4).
-        cT = np.ascontiguousarray(centers.T)
-        c2 = np.einsum("ij,ij->i", centers, centers)
-        for i0 in range(0, n, CH):
-            i1 = min(i0 + CH, n)
-            dch = np.dot(x32[i0:i1], cT)
-            dch *= -2.0
-            dch += c2[None, :]
-            assign[i0:i1] = dch.argmin(axis=1)
-        counts = np.bincount(assign, minlength=k)
-        sums = np.empty((k, d), dtype=np.float64)
-        for t in range(d):
-            sums[:, t] = np.bincount(assign, weights=x32[:, t], minlength=k)
-        live = counts > 0
-        upd = centers.astype(np.float64)
-        upd[live] = sums[live] / counts[live, None]
-        centers = upd.astype(np.float32)
-    return centers.astype(np.float64)
-
-
 def train_pq(
     vectors: DataFrame,
     m: int,
@@ -109,7 +73,8 @@ def train_pq(
     subspace fits on that seeded sample (codebook quality saturates well
     below it). Encoding always covers every row.
 
-    The BOUNDED sample is collected once and all M codebooks fit
+    The BOUNDED sample (``ivf.fit_sample``: one count, one collect, which
+    also gives the dimension) is collected once and all M codebooks fit
     driver-side with seeded Lloyd iterations (:func:`train_pq_np`) — the
     faiss recipe: the training set is capped by construction
     (<= max(10k, 256k) rows x dim floats, tens of MB), so M distributed
@@ -118,21 +83,10 @@ def train_pq(
     build; the numpy fit is GEMM-bound seconds (PLANS.md r4)."""
     if k > 256:
         raise ValueError("PQ K must be <= 256 (codes are bytes)")
-    dim = len(vectors.select(vector_col).first()[0])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by M={m}")
-    n = vectors.count()
-    kk = min(k, n)
-    fit_src = vectors
-    if fit_fraction is not None and 0.0 < fit_fraction < 1.0:
-        fit_src = vectors.sample(fraction=fit_fraction, seed=seed)
-    elif fit_fraction is None:
-        cap = max(10_000, 256 * kk)
-        if n > cap:
-            fit_src = vectors.sample(fraction=cap / n, seed=seed)
-    pdf = fit_src.select(F.col(vector_col).alias("_v")).toPandas()
-    mat = np.asarray(pdf["_v"].tolist(), dtype=np.float32)
-    return train_pq_np(mat, m, kk, seed=seed, max_iter=max_iter)
+    mat = fit_sample(vectors, vector_col, k, seed=seed, fit_fraction=fit_fraction)
+    if not len(mat):
+        raise ValueError("cannot train PQ on an empty table (or empty fit sample)")
+    return train_pq_np(mat, m, k, seed=seed, max_iter=max_iter)
 
 
 def train_pq_np(
@@ -156,7 +110,7 @@ def train_pq_np(
     with ThreadPoolExecutor(max_workers=min(m, 8)) as ex:
         books = list(
             ex.map(
-                lambda sub: _lloyd_fit(
+                lambda sub: lloyd_fit(
                     mat[:, sub * dsub : (sub + 1) * dsub], kk,
                     seed=seed + sub, iters=max_iter,
                 ),
@@ -318,31 +272,26 @@ def build_ivf_pq(
 ) -> tuple[DataFrame, IvfPqModel]:
     """Coarse KMeans -> residuals -> PQ on residuals -> encode
     (reference IvfPqVectorIndex.cs:55-116). Returns
-    (id, cluster_id, pq_codes) and the combined model."""
-    from pyrope_spark.operators.ivf import build_ivf
+    (id, cluster_id, pq_codes) and the combined model.
 
+    One bounded driver sample (``ivf.fit_sample``, capped for the larger of
+    nlist and K) feeds both fits: the coarse k-means, then the PQ codebooks
+    on its residuals, whose cluster ids come from the same
+    ``nearest_centroid`` the executor kernel runs. The coarse assignment
+    itself stays lazy and runs once, inside the encode (and whatever job
+    consumes it)."""
+    # build_ivf is looked up per call: a wrapper installed on the ivf
+    # module (vecbench's tracer) then sees the coarse build
+    from pyrope_spark.operators.ivf import build_ivf, nearest_centroid
+
+    sample = fit_sample(vectors, vector_col, max(nlist, k), seed=coarse_seed)
     assigned, ivf_model = build_ivf(
-        vectors, nlist, metric="l2", vector_col=vector_col, seed=coarse_seed
+        vectors, nlist, metric="l2", vector_col=vector_col, seed=coarse_seed,
+        sample=sample,
     )
-    cents = np.asarray(ivf_model.centroids, dtype=np.float64)
-    # train on a bounded seeded sample with residuals computed driver-side,
-    # encode with residuals computed inside the Arrow kernel — the previous
-    # shape ran an interpreted per-element zip_with HOF over the corpus
-    # twice (train sample + full encode); measured as a large share of the
-    # build at 100k x d128 (PLANS.md r4)
-    n = assigned.count()
-    kk = min(k, n)
-    cap = max(10_000, 256 * kk)
-    fit_src = assigned
-    if n > cap:
-        fit_src = assigned.sample(fraction=cap / n, seed=PQ_SEED)
-    pdf = fit_src.select(
-        F.col("cluster_id").alias("_c"), F.col(vector_col).alias("_v")
-    ).toPandas()
-    sample = np.asarray(pdf["_v"].tolist(), dtype=np.float64)
-    resid_sample = (
-        (sample - cents[pdf["_c"].to_numpy().astype(np.int64)])
-        .astype(np.float32)
+    cents = ivf_model.centroids
+    resid_sample = (sample - cents[nearest_centroid(sample, cents, "l2")]).astype(
+        np.float32
     )
     pq_model = train_pq_np(resid_sample, m=m, k=k, seed=PQ_SEED)
     encoded = pq_encode(

@@ -161,7 +161,7 @@ def main() -> None:
         # (everything after the original generated block's last table)
         tail = ""
     with open(path, "w") as f:
-        f.write(generated + marker_end + "\n" + tail)
+        f.write(generated + marker_end + (tail or "\n"))
     print(generated)
 
 

@@ -257,6 +257,26 @@ def test_dedup_groups_transitive_merge(spark):
         assert rows[d] == (d, 1, False)
 
 
+def test_embedding_neardup_learned_blocks_with_zero_vector(spark):
+    """Learned (k-means) cosine blocking over a table with a zero-norm
+    embedding: the zero row stays out of the fit and is never a pair, and
+    the planted near-copies are found."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    base = rng.random((60, 8)) - 0.5
+    rows = [(i, [float(x) for x in base[i]]) for i in range(60)]
+    rows += [(100 + i, [float(x) for x in base[i] + rng.normal(0, 1e-5, 8)]) for i in range(10)]
+    rows.append((999, [0.0] * 8))
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    pairs = {
+        (r["ia"], r["ib"])
+        for r in embedding_neardup_pairs(emb, threshold=0.999, blocked=True, nlist=4).collect()
+    }
+    assert {(i, 100 + i) for i in range(10)} <= pairs
+    assert not any(999 in p for p in pairs)
+
+
 def test_embedding_neardup_auto_blocks_above_bound(spark):
     """The DEFAULT path above exact_max_rows must never plan a cross join
     (VERDICT r4 What's-wrong #5): blocked='auto' switches to the clustered

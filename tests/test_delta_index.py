@@ -36,6 +36,31 @@ def built_store(spark, tmp_path):
     return st, model
 
 
+def _group_stage_names(sc, group):
+    """Job ids of a job group and the names (call sites) of their stages."""
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    return jobs, [tracker.getStageInfo(s).name for s in stages if tracker.getStageInfo(s)]
+
+
+def test_build_runs_no_mllib_job(spark, tmp_path):
+    """The coarse k-means fits on the driver: no build job has an MLlib
+    call site."""
+    st = VectorStore(spark, str(tmp_path / "store"))
+    st.add(_records(spark, 300))
+    sc = spark.sparkContext
+    sc.setJobGroup("delta_build", "build delta index")
+    try:
+        build_delta_index(st, T, I, nlist=8)
+    finally:
+        sc.setJobGroup("", "")
+    jobs, names = _group_stage_names(sc, "delta_build")
+    assert jobs and names
+    mllib = [n for n in names if "KMeans.scala" in n or "DistanceMeasure.scala" in n]
+    assert not mllib, mllib
+
+
 def test_build_writes_segments_and_centroids(built_store, spark):
     st, model = built_store
     from pyrope_spark.operators.delta_index import load_delta_index

@@ -52,6 +52,39 @@ def test_full_probe_equals_bruteforce(data, metric):
     assert ivf_recall(approx, exact, 10) == 1.0
 
 
+def test_build_centroids_independent_of_partitioning(data):
+    """The fit sample is put in a canonical order before the seeded init,
+    so the same rows give the same centroids however they are partitioned."""
+    vectors, _ = data
+    _, m1 = build_ivf(vectors.repartition(1), nlist=NLIST, metric="l2")
+    _, m7 = build_ivf(vectors.repartition(7), nlist=NLIST, metric="l2")
+    assert (m1.centroids == m7.centroids).all()
+
+
+def test_cosine_build_with_zero_vector_matches_bruteforce(spark):
+    """A zero-norm row has no direction: it stays out of the spherical fit,
+    is assigned to cluster 0, and full-probe search is still the exact
+    top-k."""
+    import numpy as np
+
+    r = np.random.default_rng(5)
+    rows = [(f"v{i}", [float(x) for x in r.random(DIM) - 0.5]) for i in range(200)]
+    vectors = spark.createDataFrame(
+        rows + [("zero", [0.0] * DIM)], "id string, vector array<float>"
+    )
+    queries = spark.createDataFrame(
+        [(f"q{i}", [float(x) for x in r.random(DIM) - 0.5]) for i in range(6)],
+        "query_id string, vector array<float>",
+    )
+    assigned, model = build_ivf(vectors, nlist=NLIST, metric="cosine")
+    assert model.nlist == NLIST
+    assert np.allclose(np.linalg.norm(model.centroids, axis=1), 1.0)
+    assert assigned.filter(F.col("id") == "zero").first()["cluster_id"] == 0
+    approx = ivf_search(assigned, model, queries, k=10, nprobe=NLIST)
+    exact = knn_bruteforce(vectors, queries, k=10, metric="cosine")
+    assert ivf_recall(approx, exact, 10) == 1.0
+
+
 def test_partial_probe_recall(data):
     vectors, queries = data
     assigned, model = build_ivf(vectors, nlist=NLIST, metric="l2")

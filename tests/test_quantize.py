@@ -117,6 +117,26 @@ def test_ivf_pq_recall(pq_fixture):
     assert r >= 0.5, f"IVF-PQ recall@10 {r} below FIXTURES threshold"
 
 
+def test_ivf_pq_build_and_pack_assigns_once(pq_fixture, spark, tmp_path):
+    """build_ivf_pq + pack_pq_segments(...).write: one count and one sample
+    collect feed both fits, and the lazy coarse assignment runs once,
+    inside the write — not again for a count or a residual sample."""
+    from pyrope_spark.operators.segments import pack_pq_segments
+
+    vectors, _ = pq_fixture
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf_pq_build", "build ivf-pq and write packed codes")
+    try:
+        encoded, _ = build_ivf_pq(vectors, nlist=8, m=M, k=64)
+        pack_pq_segments(encoded).write.parquet(str(tmp_path / "pq"))
+    finally:
+        sc.setJobGroup("", "")
+    jobs = sc.statusTracker().getJobIdsForGroup("ivf_pq_build")
+    assert 0 < len(jobs) <= 8, f"expected <= 8 Spark jobs, saw {len(jobs)}"
+    packed = spark.read.parquet(str(tmp_path / "pq"))
+    assert packed.agg(F.sum("n")).first()[0] == vectors.count()
+
+
 def test_sq8_reconstruction_error_closed_form(spark):
     from pyrope_spark.operators.quantize import sq8_reconstruction_error
 
