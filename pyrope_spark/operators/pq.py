@@ -120,15 +120,6 @@ def train_pq_np(
     return PqModel(codebooks=np.stack(books), m=m, k=kk, dsub=dsub)
 
 
-def _codes_schema(id_col: str) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField(id_col, T.StringType()),
-            T.StructField("pq_codes", T.ArrayType(T.IntegerType())),
-        ]
-    )
-
-
 def pq_encode(
     vectors: DataFrame,
     model: PqModel,
@@ -405,7 +396,6 @@ def train_opq_rotation(
     *,
     vector_col: str = "vector",
     seed: int = PQ_SEED,
-    fit_cap: int = 65536,
 ) -> np.ndarray:
     """(dim x dim) orthonormal rotation: PCA basis with principal
     directions allocated to the M subspaces so the PRODUCT of per-subspace
@@ -415,18 +405,13 @@ def train_opq_rotation(
     plain PQ's axis-aligned subspaces waste codebook capacity; rotating
     first decorrelates and spreads the energy.
 
-    Driver-side eigendecomposition on a bounded seeded sample (the same
+    Driver-side eigendecomposition on the bounded seeded sample of
+    :func:`ivf.fit_sample` at k = 256 (at most 65,536 rows, the same
     faiss-convention cap as codebook training): covariance is dim x dim,
     tiny at any corpus size. Apply with :func:`rotate_vectors` to BOTH the
     corpus (before ``build_ivf_pq``) and every query batch.
     """
-    n = vectors.count()
-    src = vectors
-    if n > fit_cap:
-        src = vectors.sample(fraction=fit_cap / n, seed=seed)
-    x = np.vstack([
-        np.asarray(r[vector_col], dtype=np.float64) for r in src.collect()
-    ])
+    x = fit_sample(vectors, vector_col, 256, seed=seed)
     dim = x.shape[1]
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by M={m}")

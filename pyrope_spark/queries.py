@@ -1326,7 +1326,7 @@ def _delta_lifecycle_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # documented upsert fast-path knobs (the index is already registered
     # by the add() above, the pair set is known, the count is unused) —
-    # skips three redundant full-batch jobs; merge semantics unchanged
+    # skip the batch aggregate; merge semantics unchanged
     store.upsert(
         ups, touched_pairs=[("t", "i")], validate_dims=False,
         return_count=False,

@@ -90,7 +90,16 @@ class VectorStore:
 
     def _read(self, path: str) -> DataFrame:
         if not os.path.exists(path):
-            return self.spark.createDataFrame([], RECORD_SCHEMA)
+            # an empty LOCAL relation (the false filter makes it one): a
+            # union drops it, an action on it starts no Python worker, and
+            # its zero size lets a join broadcast a scan that unions it. An
+            # empty createDataFrame is a Python RDD of unknown size, whose
+            # first action in a process can pay ~1 s of worker start.
+            return (
+                self.spark.range(0)
+                .select(*[F.lit(None).cast(f.dataType).alias(f.name) for f in RECORD_SCHEMA])
+                .filter(F.lit(False))
+            )
         return self.spark.read.schema(RECORD_SCHEMA).parquet(path)
 
     def snapshot(
@@ -107,12 +116,16 @@ class VectorStore:
         scan prunes to only the touched directories (verified by
         ``tests/test_store.py`` plan assertion).
 
-        With no head directory the view is the pruned tail as stored, with
-        no latest-wins window (a full shuffle): only :meth:`compact` writes
-        the tail, and it writes a resolved snapshot, one record per key."""
-        if not os.path.exists(self.head_path):
-            return self._scan(tenant_id, index_name, pairs, head=False)
-        return _latest(self._scan(tenant_id, index_name, pairs))
+        With no head directory the view is the pruned tail as stored (see
+        :meth:`_resolve`)."""
+        return self._resolve(self._scan(tenant_id, index_name, pairs))
+
+    def _resolve(self, scan: DataFrame) -> DataFrame:
+        """Latest-wins over a raw :meth:`_scan`. With no head directory the
+        scan is returned as is, with no window (a full shuffle): only
+        :meth:`compact` writes the tail, and it writes a resolved snapshot,
+        one record per key."""
+        return _latest(scan) if os.path.exists(self.head_path) else scan
 
     def _head_of(self, tenant_id: str, index_name: str) -> DataFrame:
         return self._read(self.head_path).filter(
@@ -164,14 +177,9 @@ class VectorStore:
         tenant_id: str | None = None,
         index_name: str | None = None,
         pairs: list[tuple[str, str]] | None = None,
-        head: bool = True,
     ) -> DataFrame:
-        """Raw (unresolved) head ∪ tail scan with partition pruning;
-        ``head=False`` scans the tail alone (a missing head would otherwise
-        still cost an empty-RDD scan per action)."""
-        df = self._read(self.tail_path)
-        if head:
-            df = self._read(self.head_path).unionByName(df)
+        """Raw (unresolved) head ∪ tail scan with partition pruning."""
+        df = self._read(self.head_path).unionByName(self._read(self.tail_path))
         if tenant_id is not None:
             df = df.filter(F.col("tenant_id") == tenant_id)
         if index_name is not None:
@@ -182,14 +190,6 @@ class VectorStore:
                 cond = cond | ((F.col("tenant_id") == t) & (F.col("index_name") == i))
             df = df.filter(cond)
         return df
-
-    def _touched(self, df: DataFrame) -> list[tuple[str, str]]:
-        return sorted(
-            {
-                (r["tenant_id"], r["index_name"])
-                for r in df.select("tenant_id", "index_name").distinct().collect()
-            }
-        )
 
     def live(self, tenant_id: str | None = None, index_name: str | None = None) -> DataFrame:
         return self.snapshot(tenant_id, index_name).filter(~F.col("deleted"))
@@ -219,31 +219,12 @@ class VectorStore:
             .select(*DATA_COLS, *extra_cols)
         )
 
-    def _check_dims(self, df: DataFrame) -> None:
-        dims = (
-            df.groupBy("tenant_id", "index_name")
-            .agg(F.collect_set(F.size("vector")).alias("dims"))
-            .collect()
-        )
-        for r in dims:
-            if len(r["dims"]) != 1:
-                raise ValueError(
-                    f"VEC_ERR_DIM: mixed dims {r['dims']} in {r['tenant_id']}:{r['index_name']}"
-                )
-            self.registry.get_or_create(r["tenant_id"], r["index_name"], r["dims"][0])
-
-    def add(self, df: DataFrame) -> int:
-        """Insert-only; any existing key (live OR tombstoned) is an error,
-        including a key appearing twice WITHIN the input batch — the
-        reference TryAdd rejects the second add of an id
-        (reference: VectorStore.TryAdd, VectorCommandSet.cs:605-615).
-
-        r11 opt (guide §1.2): ONE per-index aggregate supplies the dim
-        check, the touched-pair set, the in-batch duplicate test
-        (``count == distinct ids``, NULL counted as its own id value) AND
-        the batch row count — the previous form ran four separate
-        full-input jobs for the same facts. The offending-key lookups
-        only run on the error paths."""
+    def _batch_stats(self, df: DataFrame) -> list:
+        """The facts a write needs about its input batch, from ONE
+        per-(tenant, index) aggregate: ``_n`` rows, ``_nid`` distinct ids
+        (NULL counted as its own id value) and ``_dims``, the set of vector
+        sizes. Checks that each index gets one dim and registers new
+        indexes with it (VEC_ERR_DIM otherwise)."""
         stats = (
             df.groupBy("tenant_id", "index_name")
             .agg(
@@ -265,6 +246,22 @@ class VectorStore:
             self.registry.get_or_create(
                 r["tenant_id"], r["index_name"], r["_dims"][0]
             )
+        return stats
+
+    def add(self, df: DataFrame) -> int:
+        """Insert-only; any existing key (live OR tombstoned) is an error,
+        including a key appearing twice WITHIN the input batch — the
+        reference TryAdd rejects the second add of an id
+        (reference: VectorStore.TryAdd, VectorCommandSet.cs:605-615).
+
+        The batch aggregate (:meth:`_batch_stats`) supplies the dim check,
+        the touched-pair set, the in-batch duplicate test
+        (``count == distinct ids``) AND the returned row count. The
+        existing-key probe is a semi-join against the RAW records of the
+        touched indexes: a key is in the snapshot iff some record has it
+        (tombstones included), so it needs no latest-wins window. The
+        offending-key lookups only run on the error paths."""
+        stats = self._batch_stats(df)
         touched = sorted((r["tenant_id"], r["index_name"]) for r in stats)
         if any(r["_n"] != r["_nid"] for r in stats):
             d = (
@@ -278,10 +275,13 @@ class VectorStore:
         # a store with no head and no tail cannot contain any key — skip
         # the existing-key join on the fresh-store path (bulk first load)
         if os.path.exists(self.head_path) or os.path.exists(self.tail_path):
-            existing = self.snapshot(pairs=touched).select(*KEY_COLS)
+            existing = self._scan(pairs=touched).select(*KEY_COLS)
+            # one partition of batch keys: a limit(1) that finds nothing
+            # otherwise re-runs as a job per scale-up round of partitions
             dups = (
                 df.select(*KEY_COLS)
-                .join(existing, KEY_COLS, "inner")
+                .coalesce(1)
+                .join(existing, KEY_COLS, "left_semi")
                 .limit(1)
                 .collect()
             )
@@ -291,7 +291,11 @@ class VectorStore:
                     f"Vector already exists: "
                     f"{d['tenant_id']}:{d['index_name']}:{d['id']}"
                 )
-        return self._append(df, touched, known_n=sum(r["_n"] for r in stats))
+        prepped = self._prep(df, self.registry.next_seq(), datetime.now(timezone.utc))
+        prepped.write.mode("append").partitionBy("tenant_id", "index_name").parquet(self.head_path)
+        for t, i in touched:
+            self.registry.bump_epoch(t, i)
+        return sum(r["_n"] for r in stats)
 
     def upsert(
         self,
@@ -316,22 +320,33 @@ class VectorStore:
         createDataFrame); after a shuffle/repartition/join the surviving
         duplicate is arbitrary.
 
-        ``validate_dims=False`` skips the per-call dim-consistency scan and
-        ``return_count=False`` skips the row-count action (returns -1) —
-        both are per-batch Spark jobs that a fixed-schema STREAMING ingest
-        pays redundantly on every micro-batch (the stream's schema cannot
-        drift); the batch API keeps them on by default. A batch touching a
-        NOT-YET-REGISTERED index always runs the validating scan (it is
-        what registers the index + its dim).
+        The batch aggregate (:meth:`_batch_stats`) checks the dims,
+        registers new indexes, finds the touched (tenant_id, index_name)
+        pairs and gives the returned count: the batch's distinct keys. That
+        is the number of rows the merge writes, because the new rows'
+        ``_seq`` is above every stored one, so each batch key wins its
+        window.
 
-        ``touched_pairs``: the (tenant_id, index_name) pairs present in
-        ``df``, when the caller knows them (a single-index streaming sink
-        does) — skips the per-batch distinct+collect job that otherwise
-        discovers them. Rows outside the declared pairs would land in
-        unregistered partitions, so only pass what is actually true."""
-        touched = touched_pairs if touched_pairs is not None else self._touched(df)
-        if validate_dims or any(self.registry.get(t, i) is None for t, i in touched):
-            self._check_dims(df)
+        Streaming fast path: ``touched_pairs`` given with every pair
+        already registered, ``validate_dims=False`` and
+        ``return_count=False`` (returns -1) together skip that one
+        aggregate, a per-batch Spark job a fixed-schema stream would pay
+        redundantly on every micro-batch. Any other combination runs it;
+        a NOT-YET-REGISTERED index always does (it is what registers the
+        index + its dim). Rows outside the declared ``touched_pairs`` would
+        land in unregistered partitions, so only pass what is actually
+        true."""
+        if (
+            touched_pairs is not None
+            and not validate_dims
+            and not return_count
+            and all(self.registry.get(t, i) is not None for t, i in touched_pairs)
+        ):
+            touched, n = touched_pairs, -1
+        else:
+            stats = self._batch_stats(df)
+            touched = sorted((r["tenant_id"], r["index_name"]) for r in stats)
+            n = sum(r["_nid"] for r in stats) if return_count else -1
         seq = self.registry.next_seq()
         now = datetime.now(timezone.utc)
         # ONE shuffle resolves everything: in-batch last-write-wins, the
@@ -381,53 +396,51 @@ class VectorStore:
             .select(*DATA_COLS)
         )
         merged.write.mode("append").partitionBy("tenant_id", "index_name").parquet(self.head_path)
-        n = merged.count() if return_count else -1
         for m in touched:
             self.registry.bump_epoch(*m)
         return n
 
-    def _append(
-        self,
-        df: DataFrame,
-        touched: list[tuple[str, str]] | None = None,
-        known_n: int | None = None,
-    ) -> int:
-        seq = self.registry.next_seq()
-        now = datetime.now(timezone.utc)
-        prepped = self._prep(df, seq, now)
-        prepped.write.mode("append").partitionBy("tenant_id", "index_name").parquet(self.head_path)
-        # known_n: callers that already counted the batch (add()'s fused
-        # pre-check aggregate) skip the post-write recount job
-        n = known_n if known_n is not None else prepped.count()
-        if touched is None:
-            touched = self._touched(df)
-        for t, i in touched:
-            self.registry.bump_epoch(t, i)
-        return n
-
     def delete(self, keys: list[tuple[str, str, str]]) -> int:
         """Tombstone delete: keeps the record, flips ``deleted``, bumps epoch
-        (reference: VectorStore.cs:41-58, VectorCommandSet.cs:657-724)."""
-        kdf = self.spark.createDataFrame(keys, "tenant_id string, index_name string, id string")
-        pairs = sorted({(k[0], k[1]) for k in keys})
-        current = self.snapshot(pairs=pairs).join(kdf, KEY_COLS, "inner").filter(~F.col("deleted"))
+        (reference: VectorStore.cs:41-58, VectorCommandSet.cs:657-724).
+        Returns the number of live keys tombstoned; a key given twice is
+        tombstoned and counted once.
+
+        The keys are a driver list, so the raw scan of their indexes is
+        filtered to exactly those keys BEFORE the latest-wins window (legal:
+        the window partitions by the key). The live winners, at most one
+        per key, come back in one Arrow collect and the tombstones are
+        written from that table as one partition."""
+        by_pair: dict[tuple[str, str], set[str]] = {}
+        for t, i, k in keys:
+            by_pair.setdefault((t, i), set()).add(k)
+        wanted = F.lit(False)
+        for (t, i), ids in sorted(by_pair.items()):
+            wanted = wanted | (
+                (F.col("tenant_id") == t)
+                & (F.col("index_name") == i)
+                & F.col("id").isin(sorted(ids))
+            )
+        raw = self._scan(pairs=sorted(by_pair)).filter(wanted)
         seq = self.registry.next_seq()
         now = datetime.now(timezone.utc)
         tomb = (
-            current.withColumn("deleted", F.lit(True))
+            self._resolve(raw)
+            .filter(~F.col("deleted"))
+            .withColumn("deleted", F.lit(True))
             .withColumn("updated_at", F.lit(now))
             .withColumn("_seq", F.lit(seq).cast("long"))
             .select(*DATA_COLS)
+            .toArrow()
         )
-        # keys-sized by construction; materialize once so the write and
-        # the count don't each re-run the snapshot window + key join
-        tomb = tomb.localCheckpoint(eager=True)
-        tomb.write.mode("append").partitionBy("tenant_id", "index_name").parquet(self.head_path)
-        n = tomb.count()
-        for t, i in {(k[0], k[1]) for k in keys}:
+        if tomb.num_rows:
+            self.spark.createDataFrame(tomb, RECORD_SCHEMA).coalesce(1).write.mode(
+                "append"
+            ).partitionBy("tenant_id", "index_name").parquet(self.head_path)
+        for t, i in by_pair:
             if self.registry.get(t, i) is not None:
                 self.registry.bump_epoch(t, i)
-        return n
+        return tomb.num_rows
 
     # ---------------------------------------------------------- search/build
 

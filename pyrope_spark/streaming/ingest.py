@@ -36,16 +36,15 @@ def stream_upsert_to_store(
     head table. ``stream_df`` must carry the record columns
     (tenant_id, index_name, id, vector[, meta, tags]).
 
-    By default the per-batch dim-validation scan and result-count jobs are
-    skipped (``validate_dims=False``): a stream's schema is fixed, so paying
-    those two Spark jobs on EVERY micro-batch halves sustained ingest for
-    nothing — but it means the target (tenant, index) pairs must already be
-    registered (seed the store or create the index before starting the
-    stream). Pass ``validate_dims=True`` to restore the batch-API checks.
-    ``touched_pairs`` (e.g. ``[("t", "i")]`` for a single-index stream)
-    additionally skips the per-batch distinct+collect that discovers which
-    indexes a batch touches — together these make the micro-batch cost one
-    dedup+merge+write plan instead of four jobs.
+    The result count is never asked for, and dim validation is off by
+    default (``validate_dims=False``): a stream's schema is fixed. With
+    ``touched_pairs`` given as well (e.g. ``[("t", "i")]`` for a
+    single-index stream) and every pair already registered, the upsert
+    skips its per-batch aggregate (dim check, touched pairs and count), so
+    each micro-batch costs only the dedup+merge+write plan. A batch that
+    touches a pair not yet registered pays that one aggregate (it
+    registers the index and its dim), and so does every batch without
+    ``touched_pairs`` or with ``validate_dims=True``.
 
     Returns the StreamingQuery; callers own stop()/awaitTermination.
     """

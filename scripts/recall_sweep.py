@@ -10,9 +10,11 @@ Usage: python scripts/recall_sweep.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -150,7 +152,7 @@ def main() -> None:
 
     generated = "\n".join(lines) + "\n"
     marker_end = "<!-- SWEEP:END -->"
-    path = "/root/repo/RECALL.md"
+    path = os.path.join(ROOT, "RECALL.md")
     try:
         old = open(path).read()
         tail = old.split(marker_end, 1)[1] if marker_end in old else ""

@@ -198,3 +198,149 @@ def test_live_after_compact_reads_tail_without_window(spark, tmp_path):
     live = st.live("t", "i")
     assert "Window" in plan(live)
     assert {r["id"]: r["vector"][0] for r in live.collect()}["v5"] == 50.0
+
+
+def _jobs(spark, group, fn):
+    """Run ``fn`` under a Spark job group; its result and the group's job
+    count."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _head_records(st):
+    import os
+
+    return st._read(st.head_path).count() if os.path.exists(st.head_path) else 0
+
+
+def _tail_and_head(spark, tmp_path):
+    """A store with a compacted tail of v0..v39 and a head overwriting
+    v0..v4 and adding h0..h4."""
+    st = _store(spark, tmp_path)
+    st.add(_df(spark, [("t", "i", f"v{j}", [float(j), 0.0], None, []) for j in range(40)]))
+    st.compact()
+    st.upsert(_df(spark, [("t", "i", f"v{j}", [0.0, float(j)], None, []) for j in range(5)]
+                  + [("t", "i", f"h{j}", [1.0, float(j)], None, []) for j in range(5)]))
+    return st
+
+
+def test_write_ops_job_counts(spark, tmp_path):
+    """On a store with both a tail and a head: upsert is one batch
+    aggregate plus the merge write (<= 5 jobs), delete resolves only its
+    own keys (<= 3) and add probes existing keys without a window (<= 6)."""
+    st = _tail_and_head(spark, tmp_path)
+    ups = _df(spark, [("t", "i", f"v{j}", [2.0, float(j)], None, []) for j in range(3, 8)]
+              + [("t", "i", f"n{j}", [3.0, float(j)], None, []) for j in range(5)])
+    n, jobs = _jobs(spark, "store_upsert", lambda: st.upsert(ups))
+    assert n == 10 and jobs <= 5, f"upsert: {n} rows, {jobs} jobs"
+
+    dels = [("t", "i", x) for x in ("v1", "v20", "h2", "n3", "missing")]
+    n, jobs = _jobs(spark, "store_delete", lambda: st.delete(dels))
+    assert n == 4 and jobs <= 3, f"delete: {n} rows, {jobs} jobs"
+
+    adds = _df(spark, [("t", "i", f"a{j}", [4.0, float(j)], None, []) for j in range(5)])
+    n, jobs = _jobs(spark, "store_add", lambda: st.add(adds))
+    assert n == 5 and jobs <= 6, f"add: {n} rows, {jobs} jobs"
+    live = {r["id"] for r in st.live("t", "i").collect()}
+    assert len(live) == 40 + 5 + 5 + 5 - 4
+    assert not {"v1", "v20", "h2", "n3"} & live and {"a0", "n0", "h0"} <= live
+
+
+def test_upsert_count_is_records_written(spark, tmp_path):
+    """In-batch duplicates: the returned count is exactly the number of raw
+    head records the upsert added (one per distinct key)."""
+    st = _tail_and_head(spark, tmp_path)
+    before = _head_records(st)
+    n = st.upsert(_df(spark, [("t", "i", "v0", [1.0, 1.0], None, []),
+                              ("t", "i", "v0", [2.0, 2.0], None, []),
+                              ("t", "i", "z", [3.0, 3.0], None, []),
+                              ("t", "i", "z", [4.0, 4.0], None, []),
+                              ("t", "i", "z", [5.0, 5.0], None, []),
+                              ("t", "i", "v30", [6.0, 6.0], None, [])]))
+    assert n == 3
+    assert _head_records(st) - before == n
+    live = {r["id"]: r["vector"][0] for r in st.live("t", "i").collect()}
+    assert (live["v0"], live["z"], live["v30"]) == (2.0, 5.0, 6.0)
+
+
+def test_delete_repeated_key_counts_once(spark, tmp_path):
+    """A key listed twice is one tombstone and one count."""
+    st = _store(spark, tmp_path)
+    st.add(_df(spark, [("t", "i", "a", [1.0, 0.0], None, []),
+                       ("t", "i", "b", [0.0, 1.0], None, [])]))
+    before = _head_records(st)
+    assert st.delete([("t", "i", "a"), ("t", "i", "a")]) == 1
+    assert _head_records(st) - before == 1
+    assert [r["id"] for r in st.live("t", "i").collect()] == ["b"]
+
+
+def test_delete_exact_across_pairs(spark, tmp_path):
+    """The same id in two tenants: only the named pair's key is
+    tombstoned; a missing id and an already-deleted id are not counted."""
+    st = _store(spark, tmp_path)
+    st.add(_df(spark, [("tA", "i", "a", [1.0, 0.0], None, []),
+                       ("tB", "i", "a", [0.0, 1.0], None, []),
+                       ("tA", "i", "gone", [1.0, 1.0], None, [])]))
+    assert st.delete([("tA", "i", "gone")]) == 1
+    before = _head_records(st)
+    n = st.delete([("tA", "i", "a"), ("tA", "i", "missing"), ("tA", "i", "gone")])
+    assert n == 1 and _head_records(st) - before == 1
+    assert st.live("tA", "i").count() == 0
+    assert [r["id"] for r in st.live("tB", "i").collect()] == ["a"]
+
+
+def test_tombstone_keeps_live_record_columns(spark, tmp_path):
+    """A tombstone carries every column of the live record it replaces;
+    only ``deleted``, ``updated_at`` and ``_seq`` change. Checked for a key
+    resolved from head over tail and for one read from a head-less tail."""
+    st = _store(spark, tmp_path)
+    schema = (
+        "tenant_id string, index_name string, id string, vector array<float>, "
+        "meta string, tags array<string>, numeric_fields map<string,double>"
+    )
+    st.add(spark.createDataFrame(
+        [("t", "i", "a", [1.0, 2.0], '{"k":1}', ["x", "y"], {"price": 2.5}),
+         ("t", "i", "b", [3.0, 4.0], None, ["z"], {"n": -1.0})], schema))
+    st.compact()
+    st.upsert(spark.createDataFrame(
+        [("t", "i", "a", [5.0, 6.0], '{"k":2}', ["w"], {"price": 3.5, "q": 1.0})], schema))
+    for key in ("a", "b"):
+        if key == "b":
+            st.compact()
+        live = {r["id"]: r for r in st.snapshot("t", "i").collect()}[key]
+        assert st.delete([("t", "i", key)]) == 1
+        tomb = {r["id"]: r for r in st.snapshot("t", "i").collect()}[key]
+        assert tomb["deleted"] and not live["deleted"]
+        assert tomb["_seq"] > live["_seq"] and tomb["updated_at"] >= live["updated_at"]
+        for col in ("tenant_id", "index_name", "vector", "meta", "tags",
+                    "numeric_fields", "created_at"):
+            assert tomb[col] == live[col], col
+
+
+def test_delete_scan_partition_pruning(spark, tmp_path, monkeypatch):
+    """delete's key-filtered scan keeps partition filters on both partition
+    columns, for the head and the tail scan."""
+    st = _tail_and_head(spark, tmp_path)
+    st.add(_df(spark, [("tB", "i", "v1", [1.0, 0.0], None, [])]))
+    plans = []
+    df_cls = type(st.snapshot())
+    real = df_cls.toArrow
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return real(self)
+
+    monkeypatch.setattr(df_cls, "toArrow", spy)
+    assert st.delete([("t", "i", "v1")]) == 1
+    plan = plans[-1]
+    parts = plan.split("PartitionFilters")[1:]
+    assert len(parts) >= 2, plan
+    for p in parts:
+        filters = p[: p.index("]")]
+        assert "tenant_id" in filters and "index_name" in filters, filters
+    assert [r["id"] for r in st.live("tB", "i").collect()] == ["v1"]
