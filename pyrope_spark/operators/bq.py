@@ -12,12 +12,16 @@ exact float confirm re-scores only those (``similarity.exact_rerank``).
 Scale shape (100 TB): the code table is the shippable artifact — 32x
 smaller than the f32 corpus, so a 100 TB embedding store scans 3 TB of
 codes. The packed path stores codes as uint8 blobs in segment rows
-(:func:`pack_segments_bq`) and scans them with a vectorized
-XOR + LUT-popcount numpy kernel per segment; the distributed variant block-
-joins packed query segments against code segments with NO driver collect
-(the ``segment_knn_distributed`` shape). The coarse cut uses the engine-
-wide deterministic total order (hamming asc, id asc), so every path —
-expression, packed, distributed — retains the identical candidate set.
+(:func:`pack_segments_bq`: ``segments.pack_segments`` plus a sign-bit
+transform) and scans them with one emitter, :func:`_hamming_frame`: a
+vectorized XOR + LUT-popcount numpy kernel per segment, cut by
+``segments._topk_frame`` on the negated distance. :func:`segment_knn_bq`
+broadcasts the driver-side query codes; :func:`bq_topk_distributed`
+block-joins packed query segments against code segments with NO driver
+collect (the ``segment_knn_distributed`` shape). The coarse cut uses the
+engine-wide deterministic total order (hamming asc, id asc), so every
+path — expression, packed, distributed — retains the identical candidate
+set.
 
 Engine portability: ``shiftleft`` / ``bit_count`` / ``^`` (xor) exist in
 Spark and DuckDB with identical two's-complement BIGINT semantics
@@ -40,6 +44,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from pyrope_spark.functions.vector import normalize_metric
+from pyrope_spark.operators.segments import _topk_frame, pack_segments
+from pyrope_spark.operators.topk import topk_per_group
 
 WORD_BITS = 32  # bits packed per BIGINT word on the expression path
 
@@ -50,6 +56,7 @@ _POPCOUNT_LUT = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1).s
 BQ_SEGMENT_SCHEMA = (
     "segment_no int, n int, dim int, nbytes int, ids array<string>, codes binary"
 )
+_HAMMING_SCHEMA = "query_id string, id string, hamming int"
 
 
 # --------------------------------------------------------------------------
@@ -150,44 +157,30 @@ def pack_segments_bq(
     """Pack (id, vector) rows into BQ code segments: one row = one scan unit
     of ``n * ceil(dim/8)`` code bytes + the id list. At dim 128 a 262144-row
     segment is 4 MB of codes — the XOR+popcount kernel is bandwidth-bound on
-    exactly that blob."""
-    src = df.select(
-        F.col(id_col).cast("string").alias("id"), F.col(vector_col).alias("vector")
+    exactly that blob. Packed by ``segments.pack_segments`` (float32), then
+    each segment's block is turned into sign bits."""
+    float_segs = pack_segments(
+        df, id_col=id_col, vector_col=vector_col, rows_per_segment=rows_per_segment
     )
 
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids: list = []
-        vecs: list = []
-        seg_no = 0
-
-        def emit() -> pd.DataFrame:
-            nonlocal seg_no, ids, vecs
-            mat = np.vstack(vecs).astype(np.float32)
-            codes = _pack_bits(mat)
-            out = pd.DataFrame(
+    def to_bits(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            codes = [
+                _pack_bits(np.frombuffer(v, dtype=np.float32).reshape(n, d))
+                for v, n, d in zip(pdf["vecs"], pdf["n"], pdf["dim"])
+            ]
+            yield pd.DataFrame(
                 {
-                    "segment_no": [seg_no],
-                    "n": [mat.shape[0]],
-                    "dim": [mat.shape[1]],
-                    "nbytes": [codes.shape[1]],
-                    "ids": [list(ids)],
-                    "codes": [codes.tobytes()],
+                    "segment_no": pdf["segment_no"],
+                    "n": pdf["n"],
+                    "dim": pdf["dim"],
+                    "nbytes": [c.shape[1] for c in codes],
+                    "ids": pdf["ids"],
+                    "codes": [c.tobytes() for c in codes],
                 }
             )
-            seg_no += 1
-            ids, vecs = [], []
-            return out
 
-        for b in batches:
-            for _, row in b.iterrows():
-                ids.append(row["id"])
-                vecs.append(np.asarray(row["vector"], dtype=np.float32))
-                if len(ids) >= rows_per_segment:
-                    yield emit()
-        if ids:
-            yield emit()
-
-    return src.mapInPandas(pack, schema=BQ_SEGMENT_SCHEMA)
+    return float_segs.mapInPandas(to_bits, schema=BQ_SEGMENT_SCHEMA)
 
 
 def encode_queries_np(qvecs: np.ndarray) -> np.ndarray:
@@ -207,54 +200,46 @@ def _hamming_block(qc: np.ndarray, xc: np.ndarray, chunk: int = 256) -> np.ndarr
     return out
 
 
-def segment_knn_bq(
-    seg: DataFrame, qrows: list[tuple[str, np.ndarray]], k: int
-) -> DataFrame:
-    """Coarse Hamming top-``k`` over packed code segments: per-segment
-    partial top-k (numpy kernel) + global deterministic merge. Query codes
-    ship to executors by closure broadcast (32x smaller than the float
-    queries)."""
-    from pyrope_spark.operators.topk import topk_per_group
+def _hamming_frame(qc: np.ndarray, qids, row, top: int) -> pd.DataFrame:
+    """``(query_id, id, hamming)``: the best ``top`` rows of one code
+    segment row per query code ``qc[j]`` under (hamming asc, id asc) —
+    ``segments._topk_frame`` on the negated distance, the int column
+    restored after the cut."""
+    xc = np.frombuffer(row.codes, dtype=np.uint8).reshape(row.n, row.nbytes)
+    ham = _hamming_block(qc, xc)
+    out = _topk_frame(
+        -ham.T.astype(np.float64), np.asarray(row.ids, dtype=object), qids, top
+    )
+    return out.assign(hamming=(-out.pop("score")).astype(np.int32))
 
-    qids = [str(qid) for qid, _ in qrows]
-    qcodes = encode_queries_np(np.vstack([v for _, v in qrows]))
-    spark = seg.sparkSession
-    bc = spark.sparkContext.broadcast((qids, qcodes))
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # partial cut under (hamming asc, id asc): negate for the shared
-        # score-desc helper
-        from pyrope_spark.operators.segments import topk_rows_det
-
-        ids_b, qc = bc.value
-        for b in batches:
-            for _, row in b.iterrows():
-                n, nbytes = int(row["n"]), int(row["nbytes"])
-                xc = np.frombuffer(row["codes"], dtype=np.uint8).reshape(n, nbytes)
-                ids = np.asarray(row["ids"])
-                ham = _hamming_block(qc, xc)
-                idx = topk_rows_det(-ham.T.astype(np.float64), ids, min(k, n))
-                frames = []
-                for qi, qid in enumerate(ids_b):
-                    keep = idx[:, qi]
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": qid,
-                                "id": ids[keep],
-                                "hamming": ham[qi, keep].astype(np.int32),
-                            }
-                        )
-                    )
-                yield pd.concat(frames, ignore_index=True)
-
-    partial = seg.mapInPandas(scan, schema="query_id string, id string, hamming int")
+def _merge_hamming(partial: DataFrame, k: int) -> DataFrame:
     merged = topk_per_group(
         partial.withColumn("score", -F.col("hamming").cast("double")),
         ["query_id"],
         k,
     )
     return merged.select("query_id", "id", "rank", "hamming")
+
+
+def segment_knn_bq(
+    seg: DataFrame, qrows: list[tuple[str, np.ndarray]], k: int
+) -> DataFrame:
+    """Coarse Hamming top-``k`` over packed code segments: per-segment
+    partial top-k (:func:`_hamming_frame`) + global deterministic merge.
+    Query codes ship to executors by closure broadcast (32x smaller than
+    the float queries)."""
+    qids = [str(qid) for qid, _ in qrows]
+    qcodes = encode_queries_np(np.vstack([v for _, v in qrows]))
+    bc = seg.sparkSession.sparkContext.broadcast((qids, qcodes))
+
+    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        qids_b, qc = bc.value
+        for b in batches:
+            for row in b.itertuples(index=False):
+                yield _hamming_frame(qc, qids_b, row, k)
+
+    return _merge_hamming(seg.mapInPandas(scan, schema=_HAMMING_SCHEMA), k)
 
 
 def bq_topk_distributed(
@@ -270,8 +255,6 @@ def bq_topk_distributed(
     segment — queries NEVER touch the driver (the ``segment_knn_distributed``
     shape). Shuffle volume: query code blocks (32x compressed) x segments,
     then one partial-top-k merge keyed on query_id."""
-    from pyrope_spark.operators.topk import topk_per_group
-
     qseg = pack_segments_bq(
         queries, id_col=query_id_col, vector_col=query_vector_col,
         rows_per_segment=4096,
@@ -285,39 +268,12 @@ def bq_topk_distributed(
     pairs = seg.crossJoin(F.broadcast(qseg))
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyrope_spark.operators.segments import topk_rows_det
-
         for b in batches:
-            for _, row in b.iterrows():
-                n, nbytes = int(row["n"]), int(row["nbytes"])
-                xc = np.frombuffer(row["codes"], dtype=np.uint8).reshape(n, nbytes)
-                ids = np.asarray(row["ids"])
-                qn, qb = int(row["q_n"]), int(row["q_nbytes"])
-                qc = np.frombuffer(row["q_codes"], dtype=np.uint8).reshape(qn, qb)
-                qids = np.asarray(row["q_ids"])
-                ham = _hamming_block(qc, xc)
-                idx = topk_rows_det(-ham.T.astype(np.float64), ids, min(k, n))
-                frames = []
-                for qi in range(qn):
-                    keep = idx[:, qi]
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": qids[qi],
-                                "id": ids[keep],
-                                "hamming": ham[qi, keep].astype(np.int32),
-                            }
-                        )
-                    )
-                yield pd.concat(frames, ignore_index=True)
+            for row in b.itertuples(index=False):
+                qc = np.frombuffer(row.q_codes, dtype=np.uint8).reshape(row.q_n, row.q_nbytes)
+                yield _hamming_frame(qc, row.q_ids, row, k)
 
-    partial = pairs.mapInPandas(scan, schema="query_id string, id string, hamming int")
-    merged = topk_per_group(
-        partial.withColumn("score", -F.col("hamming").cast("double")),
-        ["query_id"],
-        k,
-    )
-    return merged.select("query_id", "id", "rank", "hamming")
+    return _merge_hamming(pairs.mapInPandas(scan, schema=_HAMMING_SCHEMA), k)
 
 
 # --------------------------------------------------------------------------

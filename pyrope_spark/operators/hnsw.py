@@ -61,9 +61,9 @@ class NumpyHnsw:
     ``_insert`` mirrors the reference Add. Deterministic given ``seed``.
     """
 
-    #: incremental-insert shards above this size switch to the vectorized
-    #: bulk build in ``build_mode='auto'`` (the per-row insert loop is
-    #: O(n) Python beam searches — fine to ~8k, pathological at 100k+)
+    #: shards above this size use the vectorized bulk build instead of
+    #: incremental inserts (the per-row insert loop is O(n) Python beam
+    #: searches — fine to ~8k, pathological at 100k+)
     BULK_THRESHOLD = 8192
 
     def __init__(
@@ -73,12 +73,9 @@ class NumpyHnsw:
         m: int = DEFAULT_M,
         ef_construction: int = DEFAULT_EF_CONSTRUCTION,
         seed: int = 42,
-        build_mode: str = "auto",
     ):
         if m < 2:
             raise ValueError("M must be >= 2")
-        if build_mode not in ("auto", "insert", "bulk"):
-            raise ValueError(f"unknown build_mode {build_mode!r}")
         self.metric = metric
         self.m = m
         self.efc = ef_construction
@@ -99,7 +96,7 @@ class NumpyHnsw:
         ]
         self.entry = -1
         self.max_layer = -1
-        if build_mode == "bulk" or (build_mode == "auto" and n > self.BULK_THRESHOLD):
+        if n > self.BULK_THRESHOLD:
             self._bulk_build(seed)
         else:
             for i in range(n):
@@ -504,6 +501,54 @@ class NumpyHnsw:
         return g
 
 
+def _shards(
+    vectors: DataFrame,
+    id_col: str,
+    vector_col: str,
+    max_shard_rows: int,
+    num_rows: int | None,
+) -> DataFrame:
+    """``(id, vector)`` rows sharded for per-task graphs: tables larger than
+    ``max_shard_rows`` are round-robin repartitioned to at most that many
+    rows per task. ``num_rows`` skips the sizing ``count()``."""
+    if max_shard_rows < 1:
+        raise ValueError("max_shard_rows must be >= 1")
+    n_total = vectors.count() if num_rows is None else num_rows
+    if n_total > max_shard_rows:
+        vectors = vectors.repartition(-(-n_total // max_shard_rows))  # ceil
+    return vectors.select(F.col(id_col).cast("string").alias(id_col), F.col(vector_col))
+
+
+def _collect_shard(
+    batches: Iterator[pd.DataFrame], id_col: str, vector_col: str
+) -> tuple[list, np.ndarray] | None:
+    """One task's shard as (ids, float32 matrix); None when it is empty."""
+    ids: list = []
+    vecs: list = []
+    for pdf in batches:
+        ids.extend(pdf[id_col].astype(str).tolist())
+        vecs.extend(pdf[vector_col].tolist())
+    if not ids:
+        return None
+    return ids, np.asarray(vecs, dtype=np.float32)
+
+
+def _graph_frames(
+    graph: NumpyHnsw, ids, qids, qmat: np.ndarray, k: int, ef_search: int
+) -> Iterator[pd.DataFrame]:
+    """``(query_id, id, score)`` rows: each query's top-``k`` graph search
+    over one shard (at most one frame, none when nothing was found)."""
+    top = min(k, len(ids))
+    out_q, out_i, out_s = [], [], []
+    for qid, q in zip(qids, qmat):
+        for i, score in graph.search(q, top, ef_search=ef_search):
+            out_q.append(qid)
+            out_i.append(ids[i])
+            out_s.append(score)
+    if out_q:
+        yield pd.DataFrame({"query_id": out_q, "id": out_i, "score": out_s})
+
+
 def hnsw_partition_search(
     vectors: DataFrame,
     queries: DataFrame,
@@ -539,12 +584,7 @@ def hnsw_partition_search(
     caller already knows it — it only sizes the repartition, and skipping
     the ``count()`` action removes a full table scan from every repeated
     search call over an uncached corpus."""
-    if max_shard_rows < 1:
-        raise ValueError("max_shard_rows must be >= 1")
-    n_total = vectors.count() if num_rows is None else num_rows
-    if n_total > max_shard_rows:
-        target = -(-n_total // max_shard_rows)  # ceil
-        vectors = vectors.repartition(target)
+    shards = _shards(vectors, id_col, vector_col, max_shard_rows, num_rows)
     spark = vectors.sparkSession
     qrows = queries.select(query_id_col, query_vector_col).collect()
     qids = [r[0] for r in qrows]
@@ -554,36 +594,22 @@ def hnsw_partition_search(
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids_b, qmat_b = bq.value
-        ids_all: list = []
-        vecs: list = []
-        for pdf in batches:
-            ids_all.extend(pdf[id_col].astype(str).tolist())
-            vecs.extend(pdf[vector_col].tolist())
-        if not ids_all:
+        shard = _collect_shard(batches, id_col, vector_col)
+        if shard is None:
             return
-        mat = np.asarray(vecs, dtype=np.float32)
+        ids, mat = shard
         if fallback_bruteforce:
             scores = score_matrix(
                 mat.astype(np.float64), qmat_b.astype(np.float64), metric
             )
-            yield _topk_frame(scores, np.asarray(ids_all, dtype=object), qids_b, kk)
+            yield _topk_frame(scores, np.asarray(ids, dtype=object), qids_b, kk)
         else:
             graph = NumpyHnsw(
                 mat, metric=metric, m=m, ef_construction=ef_construction, seed=seed
             )
-            top = min(kk, len(ids_all))
-            out_q, out_i, out_s = [], [], []
-            for j, qid in enumerate(qids_b):
-                for i, score in graph.search(qmat_b[j], top, ef_search=ef_search):
-                    out_q.append(qid)
-                    out_i.append(ids_all[i])
-                    out_s.append(score)
-            if out_q:
-                yield pd.DataFrame({"query_id": out_q, "id": out_i, "score": out_s})
+            yield from _graph_frames(graph, ids, qids_b, qmat_b, kk, ef_search)
 
-    scored = vectors.select(
-        F.col(id_col).cast("string").alias(id_col), F.col(vector_col)
-    ).mapInPandas(scan, RESULT_SCHEMA)
+    scored = shards.mapInPandas(scan, RESULT_SCHEMA)
     return topk_per_group(
         scored, ["query_id"], k, score_col="score", tiebreak_col="id", two_phase=False
     )
@@ -619,22 +645,12 @@ def pack_hnsw_shards(
     Sharding matches :func:`hnsw_partition_search` (round-robin repartition
     to ``<= max_shard_rows`` rows per task), so at equal ``seed``/params the
     shard graphs are the same graphs the fused path builds."""
-    if max_shard_rows < 1:
-        raise ValueError("max_shard_rows must be >= 1")
-    n_total = vectors.count() if num_rows is None else num_rows
-    if n_total > max_shard_rows:
-        target = -(-n_total // max_shard_rows)  # ceil
-        vectors = vectors.repartition(target)
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_all: list = []
-        vecs: list = []
-        for pdf in batches:
-            ids_all.extend(pdf[id_col].astype(str).tolist())
-            vecs.extend(pdf[vector_col].tolist())
-        if not ids_all:
+        shard = _collect_shard(batches, id_col, vector_col)
+        if shard is None:
             return
-        mat = np.asarray(vecs, dtype=np.float32)
+        ids, mat = shard
         graph = NumpyHnsw(
             mat, metric=metric, m=m, ef_construction=ef_construction, seed=seed
         )
@@ -642,14 +658,14 @@ def pack_hnsw_shards(
             {
                 "n": [mat.shape[0]],
                 "dim": [mat.shape[1]],
-                "ids": [ids_all],
+                "ids": [ids],
                 "graph": [graph.to_state(mat)],
             }
         )
 
-    return vectors.select(
-        F.col(id_col).cast("string").alias(id_col), F.col(vector_col)
-    ).mapInPandas(build, GRAPH_SHARD_SCHEMA)
+    return _shards(vectors, id_col, vector_col, max_shard_rows, num_rows).mapInPandas(
+        build, GRAPH_SHARD_SCHEMA
+    )
 
 
 def hnsw_search_packed_distributed(
@@ -700,17 +716,7 @@ def hnsw_search_packed_distributed(
                 qmat = np.frombuffer(row.qvecs, dtype=np.float64).reshape(
                     row.qn, row.qdim
                 ).astype(np.float32)
-                top = min(kk, int(row.n))
-                out_q, out_i, out_s = [], [], []
-                for j in range(len(qids)):
-                    for i, score in graph.search(qmat[j], top, ef_search=ef_search):
-                        out_q.append(qids[j])
-                        out_i.append(ids[i])
-                        out_s.append(score)
-                if out_q:
-                    yield pd.DataFrame(
-                        {"query_id": out_q, "id": out_i, "score": out_s}
-                    )
+                yield from _graph_frames(graph, ids, qids, qmat, kk, ef_search)
 
     scored = joined.mapInPandas(scan, RESULT_SCHEMA)
     return topk_per_group(

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyrope_spark.functions.vector import normalize_metric
-from pyrope_spark.operators.knn import knn_bruteforce, score_matrix
+from pyrope_spark.operators.knn import _score_gemm, knn_bruteforce, score_matrix
 
 DEFAULT_NPROBE = 3  # reference: IvfFlatVectorIndex.cs:14
 DEFAULT_SEED = 42  # reference: IvfFlatVectorIndex.cs:116
@@ -372,28 +372,45 @@ def write_ivf_table(assigned: DataFrame, path: str, cluster_col: str = "cluster_
     assigned.write.mode("overwrite").partitionBy(cluster_col).parquet(path)
 
 
+def _top_probes(
+    qmat: np.ndarray, centroids: np.ndarray, metric: str, nprobe: int
+) -> np.ndarray:
+    """(Q x min(nprobe, nlist)) best centroid ids per query row under the
+    index metric, best first, ties to the lower id (one stable argsort) —
+    the one probe selection of the driver and executor paths (reference:
+    FindNearestCentroid, KMeansUtils.cs:70-93). l2 keeps the diff form
+    ``-sum((c - q)^2)`` per query, not the expanded GEMM identity, so
+    border-line centroid ties resolve as in the reference's scalar loop;
+    ip and cosine are one GEMM, cosine with the score expressions'
+    zero-norm guard (score 0)."""
+    C = centroids
+    if metric == "l2":
+        scores = np.empty((len(qmat), len(C)), dtype=np.float64)
+        for i in range(len(qmat)):
+            d = C - qmat[i][None, :]
+            scores[i] = -np.einsum("ij,ij->i", d, d)
+    elif metric == "ip":
+        scores = qmat @ C.T
+    else:
+        cn = np.linalg.norm(C, axis=1)
+        qn = np.linalg.norm(qmat, axis=1)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            scores = (qmat @ C.T) / (
+                np.maximum(qn, 1e-300)[:, None] * np.maximum(cn, 1e-300)[None, :]
+            )
+        scores[:, cn < _ZERO_NORM] = 0.0
+        scores[qn < _ZERO_NORM, :] = 0.0
+    return np.argsort(-scores, axis=1, kind="stable")[:, : min(nprobe, len(C))]
+
+
 def select_probes(model: IvfModel, queries: list[tuple[str, list[float]]], nprobe: int) -> list[tuple[str, int]]:
-    """Driver-side top-nprobe centroid selection per query using the index
-    metric score (reference: FindNearestCentroid, KMeansUtils.cs:70-93)."""
-    out = []
-    C = model.centroids  # nlist x dim
-    for qid, qv in queries:
-        q = np.asarray(qv, dtype=np.float64)
-        if model.metric == "ip":
-            scores = C @ q
-        elif model.metric == "l2":
-            d = C - q[None, :]
-            scores = -np.einsum("ij,ij->i", d, d)
-        else:
-            cn = np.linalg.norm(C, axis=1)
-            qn = np.linalg.norm(q)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                scores = np.where(
-                    (cn < 1e-6) | (qn < 1e-6), 0.0, (C @ q) / (cn * max(qn, 1e-300))
-                )
-        top = np.argsort(-scores, kind="stable")[: min(nprobe, len(C))]
-        out.extend((qid, int(c)) for c in top)
-    return out
+    """Driver-side ``(query_id, cluster_id)`` probe pairs, query-major and
+    best first, from :func:`_top_probes`."""
+    if not queries:
+        return []
+    qmat = np.asarray([v for _, v in queries], dtype=np.float64)
+    top = _top_probes(qmat, model.centroids, model.metric, nprobe)
+    return [(qid, int(c)) for (qid, _), row in zip(queries, top) for c in row]
 
 
 def ivf_search(
@@ -437,21 +454,22 @@ def ivf_search(
     to override explicitly.  ``distributed=False`` keeps the collecting
     path unconditionally.
 
-    Precision note (r9): the distributed path also rounds the QUERY
-    vectors to float32 for transport (`select_probes_distributed`), so
-    both probe selection and final scores see float32 queries there;
-    the collecting and ``expr`` paths keep float64 queries end-to-end.
+    Precision note (r9): the distributed path rounds the QUERY vectors to
+    float32 for transport (`select_probes_distributed`). Probe selection
+    still sees the float64 query, so it picks the same probes as the
+    collecting path; the final scores see the float32 query. The
+    collecting and ``expr`` paths keep float64 queries end-to-end.
     """
     from pyrope_spark.operators.similarity import _pick_distributed
 
+    live = assigned
+    if deleted_col is not None:
+        live = live.filter(~F.coalesce(F.col(deleted_col), F.lit(False)))
     if _pick_distributed(distributed, queries) and not (
         impl == "expr" and distributed == "auto"
     ):
         from pyrope_spark.operators.segments import pack_segments
 
-        live = assigned
-        if deleted_col is not None:
-            live = live.filter(~F.coalesce(F.col(deleted_col), F.lit(False)))
         seg = pack_segments(
             live, id_col=id_col, vector_col=vector_col, cluster_col=cluster_col
         )
@@ -462,24 +480,25 @@ def ivf_search(
 
     spark = assigned.sparkSession
     qrows = [(r[query_id_col], list(r[query_vector_col])) for r in queries.select(query_id_col, query_vector_col).collect()]
-    probe_pairs = select_probes(model, qrows, nprobe)
-
-    probed_clusters = sorted({c for _, c in probe_pairs})
-    cand = assigned.filter(F.col(cluster_col).isin(probed_clusters))
-    if deleted_col is not None:
-        cand = cand.filter(~F.coalesce(F.col(deleted_col), F.lit(False)))
 
     from pyrope_spark.operators.topk import topk_per_group
 
     if impl == "gemm":
-        scored = _ivf_score_gemm(
-            cand, model, qrows, probe_pairs, k,
-            id_col=id_col, vector_col=vector_col, cluster_col=cluster_col,
+        from pyrope_spark.operators.segments import _probe_map
+
+        probes = _probe_map(model, qrows, nprobe)
+        scored = _score_gemm(
+            live.filter(F.col(cluster_col).isin(sorted(probes))),
+            [q for q, _ in qrows], np.asarray([v for _, v in qrows], dtype=np.float64),
+            model.metric, k, id_col, vector_col,
+            probes=probes, cluster_col=cluster_col,
         )
         return topk_per_group(
             scored, ["query_id"], k, score_col="score", tiebreak_col="id", two_phase=False
         )
 
+    probe_pairs = select_probes(model, qrows, nprobe)
+    cand = live.filter(F.col(cluster_col).isin(sorted({c for _, c in probe_pairs})))
     probes = spark.createDataFrame(probe_pairs, f"{query_id_col} string, {cluster_col} int")
     qv = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(query_vector_col).alias("_qvec")
@@ -501,87 +520,6 @@ def ivf_search(
     return topk_per_group(scored, ["query_id"], k, score_col="score", tiebreak_col="id")
 
 
-def _ivf_score_gemm(
-    cand: DataFrame,
-    model: IvfModel,
-    qrows: list[tuple[str, list[float]]],
-    probe_pairs: list[tuple[str, int]],
-    k: int,
-    *,
-    id_col: str,
-    vector_col: str,
-    cluster_col: str,
-) -> DataFrame:
-    """Cluster-aware vectorized scorer: each Arrow batch is grouped by
-    cluster_id and multiplied (BLAS) against the sub-matrix of queries that
-    probe that cluster; only per-(batch, query) top-K survives."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from pyrope_spark.operators.knn import RESULT_SCHEMA
-
-    from pyrope_spark.operators.segments import _topk_frame
-
-    spark = cand.sparkSession
-    qids = [q for q, _ in qrows]
-    qmat = np.asarray([v for _, v in qrows], dtype=np.float64)
-    qidx = {q: i for i, q in enumerate(qids)}
-    by_cluster: dict[int, list[int]] = {}
-    for qid, c in probe_pairs:
-        by_cluster.setdefault(int(c), []).append(qidx[qid])
-    metric = model.metric
-    bq = spark.sparkContext.broadcast((qids, qmat, by_cluster))
-    kk = max(k, 1)
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_b, qmat_b, byc = bq.value
-        for pdf in batches:
-            frames = []
-            for c, grp in pdf.groupby(cluster_col):
-                sub = byc.get(int(c))
-                if not sub:
-                    continue
-                vmat = np.vstack(grp[vector_col].to_numpy()).astype(np.float64)
-                scores = score_matrix(vmat, qmat_b[sub], metric)
-                frames.append(
-                    _topk_frame(
-                        scores, grp[id_col].astype(str).to_numpy(),
-                        [qids_b[i] for i in sub], kk,
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    cols = cand.select(
-        F.col(id_col).cast("string").alias(id_col), F.col(cluster_col), F.col(vector_col)
-    )
-    return cols.mapInPandas(scan, RESULT_SCHEMA)
-
-
-def _centroid_scores(vmat: np.ndarray, C: np.ndarray, metric: str) -> np.ndarray:
-    """(Q x nlist) metric scores, higher is better — mirror of
-    :func:`select_probes`'s per-query loop. The l2 path repeats the driver
-    path's diff-based ``-(C-q)^2`` sum per query (NOT the expanded GEMM
-    identity) so border-line centroid ties resolve identically in both
-    paths; ip/cosine use GEMM, which matches up to float rounding."""
-    if metric == "ip":
-        return vmat @ C.T
-    if metric == "l2":
-        out = np.empty((vmat.shape[0], C.shape[0]), dtype=np.float64)
-        for i in range(vmat.shape[0]):
-            d = C - vmat[i][None, :]
-            out[i] = -np.einsum("ij,ij->i", d, d)
-        return out
-    cn = np.linalg.norm(C, axis=1)
-    qn = np.linalg.norm(vmat, axis=1)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        s = (vmat @ C.T) / (np.maximum(qn, 1e-300)[:, None] * np.maximum(cn, 1e-300)[None, :])
-    s[:, cn < 1e-6] = 0.0
-    s[qn < 1e-6, :] = 0.0
-    return s
-
-
 def select_probes_distributed(
     queries: DataFrame,
     model: IvfModel,
@@ -592,20 +530,20 @@ def select_probes_distributed(
 ) -> DataFrame:
     """Executor-side probe selection: broadcast the (tiny) centroid matrix,
     pick each query's nprobe nearest cells inside ``mapInPandas`` over the
-    QUERY table. Returns (query_id, qvec, cluster_id) — one row per probe,
-    with the query vector packed as float32 BINARY: the segment side of the
-    cogroup is float32-packed already (``segments.pack_segments``), so the
-    float32 transport matches the distributed twin's established precision
+    QUERY table with :func:`_top_probes`, the driver path's scorer — so on
+    the same float64 queries both paths pick the same probes. Returns
+    (query_id, qvec, cluster_id) — one row per probe, with the query vector
+    packed as float32 BINARY: the segment side of the cogroup is
+    float32-packed already (``segments.pack_segments``), so the float32
+    transport matches the distributed twin's established precision
     convention while cutting the probe shuffle ~2x vs array<double> rows
     (r9 perf pass on the ivf_dist bench entry — the GEMM itself still runs
-    in float64 after the unpack). Same ordering semantics as
-    :func:`select_probes` (stable sort, lower cid wins ties); l2 probes use
-    the same diff-based distance FORM, but on the float32-ROUNDED query —
-    both probe selection and final scoring see float32 queries on this
-    path, so near-tie top-k rankings can flip vs the collecting/``expr``
-    paths, which keep float64 queries end-to-end (r9 ADVICE note). Callers
-    needing bit-level cross-path score parity should use ``impl='expr'`` or
-    the collecting path; the recall gates cover the float32 path.
+    in float64 after the unpack). Probes are picked from the float64 query
+    before the rounding; only the scoring downstream sees the float32
+    query, so near-tie top-k rankings can flip vs the collecting/``expr``
+    paths, which score float64 queries (r9 ADVICE note). Callers needing
+    bit-level cross-path score parity should use ``impl='expr'`` or the
+    collecting path; the recall gates cover the float32 path.
 
     This is the large-batch path (VERDICT round-1 item 3): a 100k-query
     batch never collects to the driver and probe selection parallelizes
@@ -631,8 +569,7 @@ def select_probes_distributed(
             if len(pdf) == 0:
                 continue
             vmat = np.vstack(pdf[query_vector_col].to_numpy()).astype(np.float64)
-            scores = _centroid_scores(vmat, C, metric)
-            top = np.argsort(-scores, axis=1, kind="stable")[:, :npb]  # Q x npb
+            top = _top_probes(vmat, C, metric, nprobe)  # Q x npb
             packed = [
                 row.astype(np.float32).tobytes()
                 for row in vmat

@@ -11,15 +11,19 @@ Spark-first design — the query set is a DataFrame, not a loop:
   table, score with native ``zip_with``/``aggregate`` expressions (whole-stage
   codegen, exact double math — the oracle-parity path).
 - ``impl='gemm'``  : collect the (small) query set to a numpy matrix,
-  broadcast it, and scan the vector table with ``mapInPandas``: each Arrow
-  batch computes a BLAS matrix product (batch x dim) @ (dim x Q) and emits
-  only the per-batch top-K per query. The shuffle then carries at most
+  broadcast it, and scan the vector table with ``mapInPandas``
+  (:func:`_score_gemm`, the one row-table GEMM scan, which
+  ``ivf.ivf_search`` also runs with a cluster -> probing-queries map):
+  each Arrow batch computes a BLAS matrix product (batch x dim) @ (dim x Q)
+  with :func:`score_matrix` and emits only the per-batch top-K per query
+  through ``segments._topk_frame``. The shuffle then carries at most
   K * partitions rows per query instead of N rows per query. This is the
   100 TB path: per-executor GEMM + partial top-K ≈ the reference's SIMD
   kernels + bounded heap, but distributed.
 
-Both paths end with a global per-query top-K (``topk_per_group``) and
-deterministic id tiebreak.
+Both paths end with a global per-query top-K (``topk_per_group``) under
+the total order (score desc, id asc). Every local cut uses the same order,
+so the merged top-K is exact even when duplicate vectors tie on score.
 
 Filters (tombstone, tags) are applied BEFORE scoring, so Catalyst pushes them
 into the Parquet scan — strictly better recall than the reference's
@@ -271,61 +275,79 @@ def _score_gemm(
     *,
     query_tags: list | None = None,
     tags_col: str | None = None,
+    probes: dict[int, list[int]] | None = None,
+    cluster_col: str | None = None,
 ) -> DataFrame:
-    """Vectorized scan: numpy GEMM per Arrow batch, emitting per-batch
-    top-K candidates only. The query side is pre-collected (it is the small
-    side by design — the reference handles one query at a time; we batch).
+    """The row-table GEMM scan: per Arrow batch, :func:`score_matrix`
+    against the pre-collected queries (the small side by design — the
+    reference handles one query at a time; we batch), emitting each query's
+    batch top-K with ``segments._topk_frame`` under (score desc, id asc).
 
-    ``query_tags`` (list of frozenset|None, aligned with ``qids``) applies
-    the has-ALL tag filter per query *inside* the kernel, before the partial
-    top-K cut — same pre-scoring semantics as the expr path."""
+    ``probes`` (cluster_id -> indices of the queries probing it, from
+    ``segments._probe_map``) makes it the IVF scan: each batch is grouped
+    by ``cluster_col`` and every group is scored against only its probing
+    queries. ``query_tags`` (list of frozenset|None, aligned with ``qids``)
+    applies the has-ALL tag filter before the cut, as one row mask per
+    distinct filter-tag set — same pre-scoring semantics as the expr path."""
+    from pyrope_spark.operators.segments import _topk_frame
+
     spark = live.sparkSession
-    bq = spark.sparkContext.broadcast((list(qids), np.asarray(qmat, dtype=np.float64), query_tags))
-
+    tag_groups: dict[frozenset | None, list[int]] = {}
+    for j, ftags in enumerate(query_tags or [None] * len(qids)):
+        tag_groups.setdefault(ftags or None, []).append(j)
+    bq = spark.sparkContext.broadcast(
+        (list(qids), np.asarray(qmat, dtype=np.float64), probes, tag_groups)
+    )
     kk = max(k, 1)
 
+    def emit(pdf: pd.DataFrame, sub: list[int]) -> Iterator[pd.DataFrame]:
+        qids_b, qmat_b, _, groups = bq.value
+        vmat = np.vstack(pdf[vector_col].to_numpy()).astype(np.float64)  # B x d
+        ids = pdf[id_col].astype(str).to_numpy()
+        scores = score_matrix(vmat, qmat_b[sub], metric)
+        col = {j: c for c, j in enumerate(sub)}
+        for ftags, members in groups.items():
+            cols = [col[j] for j in members if j in col]
+            if not cols:
+                continue
+            if ftags is None:
+                part = scores if len(cols) == len(sub) else scores[:, cols]
+                yield _topk_frame(part, ids, [qids_b[sub[c]] for c in cols], kk)
+                continue
+            keep = np.fromiter(
+                (t is not None and len(t) > 0 and ftags <= set(t) for t in pdf[tags_col]),
+                dtype=bool,
+                count=len(pdf),
+            )
+            if keep.any():
+                yield _topk_frame(
+                    scores[np.ix_(keep, cols)], ids[keep],
+                    [qids_b[sub[c]] for c in cols], kk,
+                )
+
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_b, qmat_b, qtags_b = bq.value
-        nq = len(qids_b)
+        qids_b, _, probes_b, _ = bq.value
+        every = list(range(len(qids_b)))
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            vmat = np.vstack(pdf[vector_col].to_numpy()).astype(np.float64)  # B x d
-            ids = pdf[id_col].astype(str).to_numpy()
-            scores = score_matrix(vmat, qmat_b, metric)
-            if qtags_b is not None:
-                row_tags = [
-                    set(t) if t is not None and len(t) else None
-                    for t in pdf[tags_col].to_numpy()
+            if probes_b is None:
+                frames = list(emit(pdf, every))
+            else:
+                frames = [
+                    f
+                    for c, grp in pdf.groupby(cluster_col)
+                    if probes_b.get(int(c))
+                    for f in emit(grp, probes_b[int(c)])
                 ]
-                for j, ftags in enumerate(qtags_b):
-                    if not ftags:
-                        continue
-                    miss = np.fromiter(
-                        (rt is None or not ftags <= rt for rt in row_tags),
-                        dtype=bool,
-                        count=len(row_tags),
-                    )
-                    scores[miss, j] = -np.inf
-            top = min(kk, scores.shape[0])
-            # per-query partial top-k inside the batch (argpartition = O(B)),
-            # assembled with numpy (no per-row Python loop)
-            idx = np.argpartition(-scores, top - 1, axis=0)[:top, :]  # top x Q
-            flat = idx.T.ravel()  # query-major
-            out = pd.DataFrame(
-                {
-                    "query_id": np.repeat(np.asarray(qids_b, dtype=object), top),
-                    "id": ids[flat],
-                    "score": scores[flat, np.repeat(np.arange(nq), top)],
-                }
-            )
-            if qtags_b is not None:
-                out = out[np.isfinite(out["score"].to_numpy())]
-            yield out
+            if frames:
+                yield pd.concat(frames, ignore_index=True)
 
     sel = [F.col(id_col).alias(id_col), F.col(vector_col).alias(vector_col)]
     if tags_col is not None:
         sel.append(F.col(tags_col).alias(tags_col))
+    if cluster_col is not None:
+        sel.append(F.col(cluster_col).alias(cluster_col))
     return live.select(*sel).mapInPandas(scan, RESULT_SCHEMA)
 
 

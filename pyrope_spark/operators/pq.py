@@ -35,7 +35,7 @@ from pyspark.sql import types as T
 
 from pyrope_spark.operators.ivf import fit_sample, lloyd_fit
 from pyrope_spark.operators.knn import RESULT_SCHEMA
-from pyrope_spark.operators.segments import _topk_frame
+from pyrope_spark.operators.segments import _probe_map, _topk_frame
 from pyrope_spark.operators.topk import topk_per_group
 
 PQ_SEED = 42  # reference: ProductQuantizer.cs per-subspace seed 42+m
@@ -209,19 +209,8 @@ def pq_adc_search(
     spark = encoded.sparkSession
     qrows = queries.select(query_id_col, query_vector_col).collect()
     qids = [r[0] for r in qrows]
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
-    m, dsub, kk = model.m, model.dsub, model.k
-    tables = np.empty((len(qids), m, kk), dtype=np.float64)
-    for sub in range(m):
-        qs = qmat[:, sub * dsub : (sub + 1) * dsub]  # Q x dsub
-        c = model.codebooks[sub]  # K x dsub
-        d = (
-            np.einsum("ij,ij->i", qs, qs)[:, None]
-            - 2.0 * (qs @ c.T)
-            + np.einsum("ij,ij->i", c, c)[None, :]
-        )
-        tables[:, sub, :] = d
-    bt = spark.sparkContext.broadcast((qids, tables))
+    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64).reshape(len(qrows), model.dim)
+    bt = spark.sparkContext.broadcast((qids, _adc_tables(qmat, model)))
     topn = max(k, 1)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -229,17 +218,42 @@ def pq_adc_search(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            codes = np.vstack(pdf["pq_codes"].to_numpy()).astype(np.int64)  # B x M
-            ids = pdf[id_col].astype(str).to_numpy()
-            # dist[b, q] = sum_m tables[q, m, codes[b, m]]
-            dist = np.zeros((codes.shape[0], len(qids_b)), dtype=np.float64)
-            for sub in range(codes.shape[1]):
-                dist += tables_b[:, sub, :][:, codes[:, sub]].T  # B x Q
-            yield _topk_frame(-dist, ids, qids_b, topn)
+            yield _adc_frame(
+                tables_b, qids_b, np.vstack(pdf["pq_codes"].to_numpy()).astype(np.int64),
+                pdf[id_col].astype(str).to_numpy(), topn,
+            )
 
     cand = encoded.select(F.col(id_col).cast("string").alias(id_col), "pq_codes")
     scored = cand.mapInPandas(scan, RESULT_SCHEMA)
     return topk_per_group(scored, ["query_id"], k, score_col="score", tiebreak_col="id", two_phase=False)
+
+
+def _adc_tables(x: np.ndarray, model: PqModel) -> np.ndarray:
+    """(n, M, K) ADC distance tables of the (n x dim) rows ``x``:
+    ``table[i, m, c] = ||x_i,m - codebook[m][c]||²`` (ProductQuantizer.cs:98-120),
+    one GEMM per subspace over all rows — the one table build of every ADC
+    scan (plain queries, or residuals ``q - centroid`` for IVF-PQ)."""
+    tables = np.empty((len(x), model.m, model.k), dtype=np.float64)
+    for sub in range(model.m):
+        xs = x[:, sub * model.dsub : (sub + 1) * model.dsub]  # n x dsub
+        c = model.codebooks[sub]  # K x dsub
+        tables[:, sub, :] = (
+            np.einsum("ij,ij->i", xs, xs)[:, None]
+            - 2.0 * (xs @ c.T)
+            + np.einsum("ij,ij->i", c, c)[None, :]
+        )
+    return tables
+
+
+def _adc_frame(
+    tabs: np.ndarray, qids, codes: np.ndarray, ids: np.ndarray, top: int
+) -> pd.DataFrame:
+    """Top-``top`` rows of one (n x M) code block for each query ``qids[j]``
+    with ADC tables ``tabs[j]`` (M x K): score = -Σ_m table[m][code[m]]
+    (ProductQuantizer.cs:98-120) — the one scoring step of every ADC scan."""
+    sub_idx = np.arange(codes.shape[1])[None, :]
+    scores = np.stack([-t[sub_idx, codes].sum(axis=1) for t in tabs], axis=1)
+    return _topk_frame(scores, ids, qids, top)
 
 
 # ----------------------------------------------------------------- IVF-PQ
@@ -298,43 +312,25 @@ def _residual_adc_tables(
     nprobe: int,
     query_id_col: str,
     query_vector_col: str,
-) -> tuple[list, np.ndarray, dict[int, list[int]]]:
-    """Collect the queries, pick their probes, and build one residual ADC
-    table (M x K: ``||(q - centroid)_m - c||²``) per (query, probed
-    cluster). Returns ``(keys, tables, by_cluster)``: ``keys[i]`` is the
-    (query_id, cluster_id) of ``tables[i]``, and ``by_cluster`` maps each
-    probed cluster to its table indices."""
-    from pyrope_spark.operators.ivf import select_probes
-
+) -> tuple[list, dict[int, list[int]], dict[int, np.ndarray]]:
+    """Collect the queries, pick their probes (``segments._probe_map``) and
+    build the residual ADC tables (``q - centroid``, M x K each) of every
+    (query, probed cluster) pair in one :func:`_adc_tables` pass. Returns
+    ``(qids, probes, tables)``: ``probes[c]`` lists the indices into
+    ``qids`` of the queries probing cluster ``c``, and ``tables[c][j]`` is
+    the table of query ``probes[c][j]`` for that cluster."""
     qrows = [
-        (r[query_id_col], list(r[query_vector_col]))
+        (r[query_id_col], np.asarray(r[query_vector_col], dtype=np.float64))
         for r in queries.select(query_id_col, query_vector_col).collect()
     ]
-    qvec = {qid: np.asarray(v, dtype=np.float64) for qid, v in qrows}
-    m, dsub, kk = model.pq.m, model.pq.dsub, model.pq.k
-    keys, tabs = [], []
-    by_cluster: dict[int, list[int]] = {}
-    for qid, c in select_probes(model.ivf, qrows, nprobe):
-        rq = qvec[qid] - model.ivf.centroids[c]
-        t = np.empty((m, kk), dtype=np.float64)
-        for sub in range(m):
-            qs = rq[sub * dsub : (sub + 1) * dsub]
-            cb = model.pq.codebooks[sub]
-            t[sub] = qs @ qs - 2.0 * (cb @ qs) + np.einsum("ij,ij->i", cb, cb)
-        by_cluster.setdefault(int(c), []).append(len(keys))
-        keys.append((qid, int(c)))
-        tabs.append(t)
-    return keys, np.stack(tabs) if tabs else np.zeros((0, m, kk)), by_cluster
-
-
-def _adc_frame(
-    tabs: np.ndarray, keys: list, idxs: list[int], codes: np.ndarray, ids: np.ndarray, top: int
-) -> pd.DataFrame:
-    """Top-``top`` rows of one (n x M) code block for each of the ADC tables
-    ``idxs``: score = -Σ_m table[m][code[m]] (ProductQuantizer.cs:98-120)."""
-    sub_idx = np.arange(codes.shape[1])[None, :]
-    scores = np.stack([-tabs[ti][sub_idx, codes].sum(axis=1) for ti in idxs], axis=1)
-    return _topk_frame(scores, ids, [keys[ti][0] for ti in idxs], top)
+    probes = _probe_map(model.ivf, qrows, nprobe)
+    qs = [i for idx in probes.values() for i in idx]
+    cs = [c for c, idx in probes.items() for _ in idx]
+    resid = np.asarray([qrows[i][1] for i in qs]).reshape(len(qs), model.pq.dim)
+    tabs = _adc_tables(resid - model.ivf.centroids[cs], model.pq)
+    bounds = np.cumsum([0] + [len(idx) for idx in probes.values()])
+    tables = {c: tabs[lo:hi] for c, lo, hi in zip(probes, bounds[:-1], bounds[1:])}
+    return [q for q, _ in qrows], probes, tables
 
 
 def ivf_pq_search(
@@ -353,24 +349,24 @@ def ivf_pq_search(
     (query, cluster), so tables are built per probe pair — still tiny
     (Q * nprobe * M * K doubles) and broadcast."""
     spark = encoded.sparkSession
-    keys, tabs, by_cluster = _residual_adc_tables(
+    qids, probes, tabs = _residual_adc_tables(
         model, queries, nprobe, query_id_col, query_vector_col
     )
-    bt = spark.sparkContext.broadcast((keys, tabs, by_cluster))
-    cand = encoded.filter(F.col("cluster_id").isin(sorted(by_cluster)))
+    bt = spark.sparkContext.broadcast((qids, probes, tabs))
+    cand = encoded.filter(F.col("cluster_id").isin(sorted(probes)))
     topn = max(k, 1)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keys_b, tabs_b, by_cluster_b = bt.value
+        qids_b, probes_b, tabs_b = bt.value
         for pdf in batches:
             frames = [
                 _adc_frame(
-                    tabs_b, keys_b, by_cluster_b[int(c)],
+                    tabs_b[int(c)], [qids_b[i] for i in probes_b[int(c)]],
                     np.vstack(grp["pq_codes"].to_numpy()).astype(np.int64),
                     grp[id_col].astype(str).to_numpy(), topn,
                 )
                 for c, grp in pdf.groupby("cluster_id")
-                if by_cluster_b.get(int(c))
+                if int(c) in probes_b
             ]
             if frames:
                 yield pd.concat(frames, ignore_index=True)

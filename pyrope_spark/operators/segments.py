@@ -22,10 +22,14 @@ buffer is a SEGMENT table:
 Segments are built once per compaction (the reference rebuilds inverted
 lists at Build() time the same way, ``IvfFlatVectorIndex.cs:85-145``).
 
-Scan kernels. Every kernel decodes a segment row with
+Scan kernels. Every float kernel decodes a segment row with
 :func:`_segment_matrix` (float32 ``vecs``, SQ8 dequantized, or SQ8 byte
 codes), scores it with :func:`~pyrope_spark.operators.knn.score_matrix` and
-emits per-query top-K rows with :func:`_topk_frame`:
+emits per-query top-K rows with :func:`_topk_frame`. The same emitter cuts
+the row-table GEMM scan (``knn._score_gemm``), the ADC scans
+(``pq._adc_frame``), the BQ Hamming scans (``bq._hamming_frame``) and the
+HNSW brute-force fallback; every driver-side IVF scan takes its probes from
+:func:`_probe_map`:
 
 - :func:`segment_knn_partials` — the small-batch scan. The queries are a
   driver-side list, broadcast to the scan; each task keeps a running top-K
@@ -39,7 +43,9 @@ emits per-query top-K rows with :func:`_topk_frame`:
   packed into chunks and block-joined with the segments; no query reaches
   the driver.
 - :func:`ivf_pq_search_packed` / :func:`ivf_pq_search_distributed` — the
-  ADC scans over PQ code segments, small batch and large batch.
+  ADC scans over PQ code segments, small batch and large batch. Both build
+  their tables with ``pq._adc_tables`` (all (query, probe) residuals in one
+  pass) and score with ``pq._adc_frame``.
 """
 
 from __future__ import annotations
@@ -442,14 +448,18 @@ def _collect_queries(
 
 
 def _probe_map(model, queries_np: list[tuple[str, np.ndarray]], nprobe: int) -> dict[int, list[int]]:
-    """cluster_id -> indices of the queries probing it, from the driver-side
-    :func:`~pyrope_spark.operators.ivf.select_probes` over the centroids."""
-    from pyrope_spark.operators.ivf import select_probes
+    """cluster_id -> indices of the queries probing it (ascending), from the
+    driver-side :func:`~pyrope_spark.operators.ivf._top_probes` over the
+    centroids — the one probe map of every driver-side IVF scan."""
+    from pyrope_spark.operators.ivf import _top_probes
 
-    qidx = {q: i for i, (q, _) in enumerate(queries_np)}
+    if not queries_np:
+        return {}
+    qmat = np.asarray([v for _, v in queries_np], dtype=np.float64)
     probes: dict[int, list[int]] = {}
-    for qid, c in select_probes(model, queries_np, nprobe):
-        probes.setdefault(int(c), []).append(qidx[qid])
+    for i, row in enumerate(_top_probes(qmat, model.centroids, model.metric, nprobe)):
+        for c in row:
+            probes.setdefault(int(c), []).append(i)
     return probes
 
 
@@ -470,29 +480,34 @@ def ivf_pq_search_packed(
     from pyrope_spark.operators.pq import _adc_frame, _residual_adc_tables
 
     spark = segments.sparkSession
-    keys, tabs, by_cluster = _residual_adc_tables(
+    qids, probes, tabs = _residual_adc_tables(
         model, queries, nprobe, query_id_col, query_vector_col
     )
-    bt = spark.sparkContext.broadcast((keys, tabs, by_cluster))
-    segs = segments.filter(F.col("cluster_id").isin(sorted(by_cluster)))
+    bt = spark.sparkContext.broadcast((qids, probes, tabs))
+    segs = segments.filter(F.col("cluster_id").isin(sorted(probes)))
     topn = max(k, 1)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keys_b, tabs_b, by_cluster_b = bt.value
+        qids_b, probes_b, tabs_b = bt.value
         for pdf in batches:
             for row in pdf.itertuples(index=False):
-                idxs = by_cluster_b.get(int(row.cluster_id))
-                if not idxs:
+                c = int(row.cluster_id)
+                if c not in probes_b:
                     continue
-                codes = np.frombuffer(row.codes, dtype=np.uint8).reshape(row.n, row.m).astype(np.int64)
                 yield _adc_frame(
-                    tabs_b, keys_b, idxs, codes, np.asarray(row.ids, dtype=object), topn
+                    tabs_b[c], [qids_b[i] for i in probes_b[c]], _pq_codes(row),
+                    np.asarray(row.ids, dtype=object), topn,
                 )
 
     scored = segs.mapInPandas(scan, RESULT_SCHEMA)
     return topk_per_group(
         scored, ["query_id"], k, score_col="score", tiebreak_col="id", two_phase=False
     )
+
+
+def _pq_codes(row) -> np.ndarray:
+    """One PQ segment row's (n x m) code block as int64 table indices."""
+    return np.frombuffer(row.codes, dtype=np.uint8).reshape(row.n, row.m).astype(np.int64)
 
 
 def pack_query_segments(
@@ -640,27 +655,20 @@ def ivf_pq_search_distributed(
     the global top-K.
     """
     from pyrope_spark.operators.ivf import select_probes_distributed
+    from pyrope_spark.operators.pq import _adc_frame, _adc_tables
 
     spark = segments.sparkSession
     probed = select_probes_distributed(
         queries, model.ivf, nprobe,
         query_id_col=query_id_col, query_vector_col=query_vector_col,
     )
-    bm = spark.sparkContext.broadcast(
-        (
-            model.ivf.centroids,
-            [np.asarray(cb, dtype=np.float64) for cb in model.pq.codebooks],
-            model.pq.m,
-            model.pq.dsub,
-            model.pq.k,
-        )
-    )
+    bm = spark.sparkContext.broadcast((model.ivf.centroids, model.pq))
     kk = max(k, 1)
 
     def score_group(seg_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(seg_pdf) == 0 or len(q_pdf) == 0:
             return pd.DataFrame({"query_id": [], "id": [], "score": []})
-        centroids, codebooks, m, dsub, kcode = bm.value
+        centroids, pq_model = bm.value
         c = int(seg_pdf["cluster_id"].iloc[0])
         qids = q_pdf["query_id"].to_numpy()
         # probes arrive float32-packed (select_probes_distributed r9)
@@ -669,29 +677,14 @@ def ivf_pq_search_distributed(
             .reshape(len(q_pdf), -1)
             .astype(np.float64)
         )
-        rq = qmat - centroids[c][None, :]
-        tabs = np.empty((m, len(qids), kcode), dtype=np.float64)
-        for sub in range(m):
-            qs = rq[:, sub * dsub : (sub + 1) * dsub]
-            cb = codebooks[sub]
-            tabs[sub] = (
-                np.einsum("ij,ij->i", qs, qs)[:, None]
-                - 2.0 * (qs @ cb.T)
-                + np.einsum("ij,ij->i", cb, cb)[None, :]
-            )
-        out = []
-        for row in seg_pdf.itertuples(index=False):
-            codes = (
-                np.frombuffer(row.codes, dtype=np.uint8)
-                .reshape(row.n, row.m)
-                .astype(np.int64)
-            )
-            ids = np.asarray(row.ids, dtype=object)
-            dist = np.zeros((len(qids), row.n), dtype=np.float64)
-            for sub in range(m):
-                dist += tabs[sub][:, codes[:, sub]]
-            out.append(_topk_frame(-dist.T, ids, qids, kk))
-        return pd.concat(out, ignore_index=True)
+        tabs = _adc_tables(qmat - centroids[c][None, :], pq_model)
+        return pd.concat(
+            [
+                _adc_frame(tabs, qids, _pq_codes(row), np.asarray(row.ids, dtype=object), kk)
+                for row in seg_pdf.itertuples(index=False)
+            ],
+            ignore_index=True,
+        )
 
     scored = (
         segments.groupby("cluster_id")

@@ -401,7 +401,8 @@ class VectorStore:
         return n
 
     def delete(self, keys: list[tuple[str, str, str]]) -> int:
-        """Tombstone delete: keeps the record, flips ``deleted``, bumps epoch
+        """Tombstone delete: keeps the record, flips ``deleted``, bumps the
+        epoch of each index it tombstoned a key of
         (reference: VectorStore.cs:41-58, VectorCommandSet.cs:657-724).
         Returns the number of live keys tombstoned; a key given twice is
         tombstoned and counted once.
@@ -437,8 +438,11 @@ class VectorStore:
             self.spark.createDataFrame(tomb, RECORD_SCHEMA).coalesce(1).write.mode(
                 "append"
             ).partitionBy("tenant_id", "index_name").parquet(self.head_path)
+        # only a pair that got a tombstone changed: a no-op delete keeps
+        # that index's cached results valid
+        hit = set(zip(tomb.column("tenant_id").to_pylist(), tomb.column("index_name").to_pylist()))
         for t, i in by_pair:
-            if self.registry.get(t, i) is not None:
+            if (t, i) in hit and self.registry.get(t, i) is not None:
                 self.registry.bump_epoch(t, i)
         return tomb.num_rows
 

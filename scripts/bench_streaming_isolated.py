@@ -32,12 +32,16 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers inherit PYTHONPATH when the session starts
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from pyspark.sql import functions as F
 
 ROUND = sys.argv[1] if len(sys.argv) > 1 else "r7"
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 INGEST_ENTRIES = (
     "streaming_ingest_5000v_concurrent_search,"
@@ -48,11 +52,11 @@ INGEST_ENTRIES = (
 def run_ingest_phase() -> tuple[dict, dict]:
     env = dict(os.environ, BENCH_ONLY=INGEST_ENTRIES)
     subprocess.run(
-        [sys.executable, os.path.join(REPO, "bench.py")],
-        env=env, check=True, cwd=REPO,
+        [sys.executable, os.path.join(ROOT, "bench.py")],
+        env=env, check=True, cwd=ROOT,
         stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
     )
-    with open(os.path.join(REPO, "BENCH_full_subset.json")) as f:
+    with open(os.path.join(ROOT, "BENCH_full_subset.json")) as f:
         sub = json.load(f)
     return sub["queries"], sub.get("derived", {})
 
@@ -226,7 +230,7 @@ def main() -> None:
         "queries": timings,
         "derived": derived,
     }
-    path = os.path.join(REPO, f"BENCH_streaming_isolated_{ROUND}.json")
+    path = os.path.join(ROOT, f"BENCH_streaming_isolated_{ROUND}.json")
     with open(path, "w") as f:
         json.dump(out, f, indent=1)
         f.write("\n")

@@ -29,7 +29,12 @@ import time
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers inherit PYTHONPATH when the session starts
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from pyrope_spark.catalog import TABLES  # noqa: E402

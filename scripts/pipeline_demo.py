@@ -14,10 +14,16 @@ them. Prints one JSON line of stage counts.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers inherit PYTHONPATH when the session starts
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from pyspark.sql import functions as F  # noqa: E402
 

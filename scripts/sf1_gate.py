@@ -36,7 +36,12 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers inherit PYTHONPATH when the session starts
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import duckdb  # noqa: E402
@@ -147,10 +152,7 @@ def main() -> int:
     spark = get_spark("sf1_gate")
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        args.out,
-    )
+    out = os.path.join(ROOT, args.out)
     # resume: green rows from a prior (crashed/partial) run are kept
     results: dict[str, dict] = {}
     if os.path.exists(out):

@@ -109,9 +109,11 @@ def test_partition_pruning(data, spark, tmp_path):
     assert hits.groupBy("query_id").count().collect()[0]["count"] == 5
 
 
-def test_distributed_probe_and_search_match_driver_path(spark):
+@pytest.mark.parametrize("metric", ["l2", "ip", "cosine"])
+def test_distributed_probe_and_search_match_driver_path(spark, metric):
     """ivf_search_packed_distributed (executor-side probe selection +
-    cogrouped GEMM) must return the same hits as the driver-collect path."""
+    cogrouped GEMM) must return the same hits as the driver-collect path:
+    both pick probes with the same scorer."""
     import numpy as np
 
     from pyrope_spark.operators.ivf import (
@@ -123,7 +125,7 @@ def test_distributed_probe_and_search_match_driver_path(spark):
 
     vectors = make_vectors_df(spark, n=400, dim=16, del_frac=0.0)
     queries = make_queries_df(spark, n=30, dim=16, k=5)
-    assigned, model = build_ivf(vectors, nlist=8, metric="l2")
+    assigned, model = build_ivf(vectors, nlist=8, metric=metric)
     seg = pack_segments(
         assigned, cluster_col="cluster_id", rows_per_segment=64
     ).cache()

@@ -96,6 +96,21 @@ def test_knn_per_query_k(fixture, impl):
     assert all(v == 7 for q, v in counts.items() if q != "q0")
 
 
+@pytest.mark.parametrize("metric", ["l2", "ip", "cosine"])
+@pytest.mark.parametrize("impl", ["expr", "gemm"])
+def test_knn_tie_cut_follows_id_order(spark, metric, impl):
+    """Duplicate vectors tie on score; every local cut keeps the smaller id
+    as a string ("10" < "2") whatever the row order, so a partial top-k
+    merges exactly. One partition puts all rows in one Arrow batch."""
+    vecs = spark.createDataFrame(
+        [("2", [1.0, 0.0]), ("10", [1.0, 0.0]), ("3", [0.0, 1.0])],
+        "id string, vector array<float>",
+    ).coalesce(1)
+    qs = spark.createDataFrame([("q0", [1.0, 0.0])], "query_id string, vector array<float>")
+    got = knn_bruteforce(vecs, qs, k=1, metric=metric, impl=impl).collect()
+    assert [(r["rank"], r["id"]) for r in got] == [(1, "10")]
+
+
 def test_hydrate_drops_deleted_and_attaches_meta(fixture, spark):
     vectors, queries, *_ = fixture
     hits = knn_bruteforce(vectors, queries, k=5, metric="l2", impl="expr")  # no tombstone filter

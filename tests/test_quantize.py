@@ -117,6 +117,27 @@ def test_ivf_pq_recall(pq_fixture):
     assert r >= 0.5, f"IVF-PQ recall@10 {r} below FIXTURES threshold"
 
 
+def test_adc_tables_match_scalar_reference():
+    """The batched ADC table build equals the per-(row, subspace) distance
+    ``||x_m - c||²`` up to the float64 rounding of its expanded GEMM form,
+    a zero row included."""
+    from pyrope_spark.operators.pq import PqModel, _adc_tables
+
+    r = np.random.default_rng(5)
+    model = PqModel(codebooks=r.normal(size=(4, 16, 3)), m=4, k=16, dsub=3)
+    x = r.normal(size=(7, 12))
+    x[0] = 0.0
+    ref = np.array(
+        [
+            [[np.sum((x[i, 3 * s : 3 * s + 3] - c) ** 2) for c in model.codebooks[s]] for s in range(4)]
+            for i in range(len(x))
+        ]
+    )
+    got = _adc_tables(x, model)
+    assert got.shape == (7, 4, 16)
+    np.testing.assert_allclose(got, ref, rtol=1e-12, atol=1e-12)
+
+
 def test_ivf_pq_build_and_pack_assigns_once(pq_fixture, spark, tmp_path):
     """build_ivf_pq + pack_pq_segments(...).write: one count and one sample
     collect feed both fits, and the lazy coarse assignment runs once,

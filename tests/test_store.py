@@ -294,6 +294,22 @@ def test_delete_exact_across_pairs(spark, tmp_path):
     assert [r["id"] for r in st.live("tB", "i").collect()] == ["a"]
 
 
+def test_noop_delete_keeps_epoch(spark, tmp_path):
+    """A delete that writes no tombstone (missing or already-deleted id)
+    leaves the index epoch, and so its cached results, alone."""
+    st = _store(spark, tmp_path)
+    t, i = "t1", "idx1"
+    st.add(_df(spark, [
+        (t, i, "a", [1.0, 0.0], None, []),
+        (t, i, "b", [0.0, 1.0], None, []),
+    ]))
+    assert st.delete([(t, i, "a")]) == 1
+    e = st.epoch(t, i)
+    assert st.delete([(t, i, "missing")]) == 0
+    assert st.delete([(t, i, "a")]) == 0
+    assert st.epoch(t, i) == e
+
+
 def test_tombstone_keeps_live_record_columns(spark, tmp_path):
     """A tombstone carries every column of the live record it replaces;
     only ``deleted``, ``updated_at`` and ``_seq`` change. Checked for a key
